@@ -225,8 +225,7 @@ object Bench {
       .filter(benchable.contains).flatMap(auditedPass)
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
 
-    val qs = timed.map { case (k, v) => "\"" + k + "\":" + f"$v%.4f" }
-      .mkString("{", ",", "}")
+    val qs = jsonMap(timed, "%.4f")
     val headlineTimed = timed.filter(t => Headline.contains(t._1) && t._2 >= 0)
     val headlineTotal = headlineTimed.map(_._2).sum
     // a BENCH_ONLY subset covers only part of the headline set — name the
@@ -243,8 +242,8 @@ object Bench {
     // consumers reading only this file get the flag inline.
     val floorRatio = ((probe / 0.050) + (probeScan / 0.053)) / 2.0
     val degraded = floorRatio > 1.3
-    val health = s""""host_health":{"floor_ratio_vs_settled":${f"$floorRatio%.2f"},"degraded":$degraded,"settled_floor_ref":[0.050,0.053]}"""
-    val json = s"""{"metric":"$metric","value":$headlineTotal,"unit":"sec","methodology":"warmup_v2_per_query_adjacent","partial":$partial,$health,"queries":$qs,"shuffle_audit":$shuffleAudit,"sf":"$sfDir","headline":$hl,"per_query_overhead_sec":${f"$probe%.4f"},"per_query_scan_floor_sec":${f"$probeScan%.4f"},"note":"per-query adjacent warmup + noop-sink materialization + clearCache isolation; per-query MEDIAN of 3 timed passes, headline set first in freshest JVM state; per_query_overhead_sec = warm noop of a 1-row range; per_query_scan_floor_sec = warm noop of a 5-row parquet scan (realistic fixed cost each timed query also pays); shuffle_audit = per-headline-query task-metric deltas over one audited pass (deterministic per plan) — compare round-over-round for plan regressions wall time cannot see"}"""
+    val health = s""""host_health":{"floor_ratio_vs_settled":${num("%.2f", floorRatio)},"degraded":$degraded,"settled_floor_ref":[0.050,0.053]}"""
+    val json = s"""{"metric":"$metric","value":$headlineTotal,"unit":"sec","methodology":"warmup_v2_per_query_adjacent","partial":$partial,$health,"queries":$qs,"shuffle_audit":$shuffleAudit,"sf":"$sfDir","headline":$hl,"per_query_overhead_sec":${num("%.4f", probe)},"per_query_scan_floor_sec":${num("%.4f", probeScan)},"note":"per-query adjacent warmup + noop-sink materialization + clearCache isolation; per-query MEDIAN of 3 timed passes, headline set first in freshest JVM state; per_query_overhead_sec = warm noop of a 1-row range; per_query_scan_floor_sec = warm noop of a 5-row parquet scan (realistic fixed cost each timed query also pays); shuffle_audit = per-headline-query task-metric deltas over one audited pass (deterministic per plan) — compare round-over-round for plan regressions wall time cannot see"}"""
     // r3 verdict #10: the driver's stdout tail cap truncated the JSON once;
     // always leave a complete copy on disk too
     sys.env.get("SPARK_GRAFT_BENCH_OUT").orElse(Some("/root/repo/BENCH_LOCAL.json")).foreach { p =>
@@ -269,11 +268,20 @@ object Bench {
     * only ever ADDED), sf, plus methodology/partial/floor_ratio so
     * protocol and host health are readable without the disk copy. The
     * full detail (shuffle audit, per-child floors, probes, notes) lives
-    * in the BENCH_LOCAL.json / SPARK_GRAFT_BENCH_OUT disk copy.
+    * in the BENCH_LOCAL.json / SPARK_GRAFT_BENCH_OUT disk copy. Numbers
+    * format in `Locale.ROOT`: a decimal comma would break the JSON.
     */
-  private def compactLine(metric: String, value: Double, partial: Boolean,
+  private[graft] def compactLine(metric: String, value: Double, partial: Boolean,
       floorRatio: Double, qs: String, sfDir: String, proto: String): String =
-    s"""{"metric":"$metric","value":${f"$value%.4f"},"unit":"sec","methodology":"$proto","partial":$partial,"floor_ratio":${f"$floorRatio%.2f"},"queries":$qs,"sf":"$sfDir"}"""
+    s"""{"metric":"$metric","value":${num("%.4f", value)},"unit":"sec","methodology":"$proto","partial":$partial,"floor_ratio":${num("%.2f", floorRatio)},"queries":$qs,"sf":"$sfDir"}"""
+
+  /** a JSON number in `Locale.ROOT`: the default locale may use a comma */
+  private def num(fmt: String, x: Double): String =
+    fmt.formatLocal(java.util.Locale.ROOT, x)
+
+  /** `{"k":v,…}` with every value formatted by [[num]] */
+  private[graft] def jsonMap(kv: Seq[(String, Double)], fmt: String): String =
+    kv.map { case (k, v) => "\"" + k + "\":" + num(fmt, v) }.mkString("{", ",", "}")
 
   /** Fresh-JVM headline protocol (r18, VERDICT r17 task 3).
     *
@@ -419,16 +427,14 @@ object Bench {
       val headlineTotal = headlineOk.map(_._2).sum
       val partial = headlineOk.size < Headline.size
       val metric = if (partial) "headline_partial_total" else "headline_6q_total"
-      val qs = timed.map { case (k, v) => "\"" + k + "\":" + f"$v%.4f" }
-        .mkString("{", ",", "}")
+      val qs = jsonMap(timed, "%.4f")
       val hl = Headline.map("\"" + _ + "\"").mkString("[", ",", "]")
       val freshMap = (headSel.map(q => "\"" + q + "\":" + childOut.contains(q)) ++
         (if (rest.nonEmpty) Seq("\"_rest_shared_child\":" + restNode.nonEmpty) else Nil))
         .mkString("{", ",", "}")
-      val floorMap = floors.map { case (k, v) => "\"" + k + "\":" + f"$v%.2f" }
-        .mkString("{", ",", "}")
-      val health = s""""host_health":{"floor_ratio_vs_settled":${f"$floorRatio%.2f"},"degraded":$degraded,"settled_floor_ref":[0.050,0.053],"per_child_floor_ratio":$floorMap}"""
-      val json = s"""{"metric":"$metric","value":$headlineTotal,"unit":"sec","methodology":"warmup_v3_fresh_jvm_headline","partial":$partial,$health,"queries":$qs,"shuffle_audit":$shuffleAudit,"sf":"$sfDir","headline":$hl,"fresh_jvm":$freshMap,"per_query_overhead_sec":${f"$probe%.4f"},"per_query_scan_floor_sec":${f"$probeScan%.4f"},"note":"v3 protocol (r18): each headline query measured in its OWN fresh JVM (warmup + median of 3 timed passes, noop sink) so long-JVM state can never contaminate the comparable set; non-headline tail runs in one shared child under the unchanged v2 per-query-adjacent protocol; host_health.floor_ratio is the MEDIAN child floor with per-child ratios alongside; shuffle_audit merged from the owning child (deterministic per plan)"}"""
+      val floorMap = jsonMap(floors.toSeq, "%.2f")
+      val health = s""""host_health":{"floor_ratio_vs_settled":${num("%.2f", floorRatio)},"degraded":$degraded,"settled_floor_ref":[0.050,0.053],"per_child_floor_ratio":$floorMap}"""
+      val json = s"""{"metric":"$metric","value":$headlineTotal,"unit":"sec","methodology":"warmup_v3_fresh_jvm_headline","partial":$partial,$health,"queries":$qs,"shuffle_audit":$shuffleAudit,"sf":"$sfDir","headline":$hl,"fresh_jvm":$freshMap,"per_query_overhead_sec":${num("%.4f", probe)},"per_query_scan_floor_sec":${num("%.4f", probeScan)},"note":"v3 protocol (r18): each headline query measured in its OWN fresh JVM (warmup + median of 3 timed passes, noop sink) so long-JVM state can never contaminate the comparable set; non-headline tail runs in one shared child under the unchanged v2 per-query-adjacent protocol; host_health.floor_ratio is the MEDIAN child floor with per-child ratios alongside; shuffle_audit merged from the owning child (deterministic per plan)"}"""
       sys.env.get("SPARK_GRAFT_BENCH_OUT")
         .orElse(Some("/root/repo/BENCH_LOCAL.json")).foreach { p =>
           try java.nio.file.Files.write(java.nio.file.Paths.get(p),

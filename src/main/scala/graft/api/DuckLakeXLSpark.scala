@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.lake._
-import graft.xlsx.{ExcelRemote, XlsxCodec}
+import graft.xlsx.ExcelRemote
 
 /** The DuckLakeXL artifact, Spark-native (SURVEY.md Face B): an Excel
   * workbook is the metadata catalog of a parquet lakehouse, and every
@@ -50,9 +50,9 @@ import graft.xlsx.{ExcelRemote, XlsxCodec}
   *    sheet-by-sheet, non-atomic — README.md:28).
   *  - time travel is first-class: `snapshots()` and `tableAt(name, id)`
   *    (the reference lists it as a TODO, README.md:162-165).
-  *
-  * Single-writer, last-push-wins — same caveat as the reference
-  * (README.md:3-4,150-156).
+  *  - the push is compare-and-set on the snapshot head and writes only the
+  *    sheets that changed ([[graft.lake.CatalogSync]]); the reference is
+  *    last-push-wins and rewrites every sheet (README.md:3-4,150-156).
   */
 class DuckLakeXLSpark(
     val spark: SparkSession,
@@ -68,14 +68,6 @@ class DuckLakeXLSpark(
       * DML/ALTER/compaction touches the table.
       */
     inlineRowLimit: Int = 0,
-    /** on a stale-push CAS rejection, re-pull a fresh base and replay the
-      * statement script ONCE (bounded — a second rejection propagates).
-      * The failed attempt committed nothing, so the replay sees exactly
-      * the state a user-issued re-run would; its orphaned local data
-      * files are owned by the scheduled-deletion sweep. Set false for
-      * the strict fail-fast behavior.
-      */
-    casAutoRetry: Boolean = true,
     /** reference's `read_shared_files` (ducklakexl.py:28,46,153-154):
       * when true the Graph device-code flow also requests the
       * `Files.ReadWrite.All` scope, so workbooks SHARED WITH the user
@@ -83,27 +75,21 @@ class DuckLakeXLSpark(
       */
     readSharedFiles: Boolean = false) {
 
-  /** local xlsx or Graph workbook, picked like the reference's
+  /** sync over a local xlsx or Graph workbook, picked like the reference's
     * _pick_client (ducklakexl.py:85-97); `remoteOverride` injects a
-    * pre-built transport (e.g. a [[graft.xlsx.GraphRemote]] pointed at a
-    * test endpoint)
+    * pre-built transport. Declared, like `state` and the hook below,
+    * before `initialize()` uses it: fields initialise in declaration order.
     */
-  private val remote: ExcelRemote =
-    remoteOverride.getOrElse(
-      ExcelRemote.pick(excelPath, driveId, readSharedFiles))
+  private val sync = new CatalogSync(
+    remoteOverride.getOrElse(ExcelRemote.pick(excelPath, driveId, readSharedFiles)))
 
   @volatile private var state: CatalogState = CatalogState.empty
-  /** per-sheet digests as of the last pull/push — empty before first pull */
-  @volatile private var pulledDigest: Map[String, String] = Map.empty
 
-  /** the snapshot id this session last saw on the remote — the CAS base
-    * for [[push]]. -1 until the first pull/push; the constructor sets it
-    * via one of the two inside initialize(), so this declaration MUST
-    * precede the `initialize()` call below — Scala runs field
-    * initializers in declaration order, and a later `= -1L` would
-    * silently clobber the constructor's CAS base (review-found).
+  /** ONE-SHOT test seam: runs at the next [[push]] entry, then clears —
+    * lets a spec interleave a racing writer exactly between this
+    * session's pull and its push (ConcurrencySpec's auto-retry case)
     */
-  private var baseSnapshot: Long = -1L
+  @volatile private[graft] var onBeforePush: () => Unit = () => ()
 
   /** the schema unqualified table names resolve against (`USE <schema>`);
     * DuckLake starts every lake with `main`
@@ -364,20 +350,9 @@ class DuckLakeXLSpark(
         require(exprs.length == 3, "__graft_iv_make(months, days, micros)")
         graft.functions.IvMake(exprs(0), exprs(1), exprs(2))
       })
-    // core sheets decide pull-vs-push; optional sheets (view, stats,
-    // tombstones) parse as empty when absent so older workbooks still open
-    // (withLakeConfs: bootstrap parses stored view SQL in lake dialect)
+    // withLakeConfs: bootstrap parses stored view SQL in lake dialect
     withLakeConfs {
-      val wanted = CatalogSchema.coreTables.map(CatalogSchema.sheetName)
-      val canPull = remote.exists && {
-        val present = remote.sheetNames.toSet
-        wanted.forall(present.contains)
-      }
-      if (canPull) pull()
-      else {
-        state = seedState()
-        push()
-      }
+      state = sync.bootstrap(seedState())
       registerViews()
     }
   }
@@ -459,114 +434,41 @@ class DuckLakeXLSpark(
 
   // ------------------------------------------------------------ pull/push
 
-  /** xlsx -> CatalogState; the single-reference swap is the transaction
-    * (reference: TRUNCATE+INSERT per metadata table, ducklakexl.py:459-464)
-    */
-  def pull(): Unit = {
-    val sheets = remote.readAll().map { case (n, rows) => XlsxSheet(n, rows) }
-    state = CatalogState.fromSheets(sheets)
-    baseSnapshot = state.currentSnapshot
-    pulledDigest = sheets.map(s => s.name -> sheetDigest(s.rows)).toMap
-  }
+  /** adopt the workbook's catalog as this session's base */
+  def pull(): Unit = state = sync.pull()
 
-  /** md5 over a canonical cell serialization (length-PREFIXED cells +
-    * row terminators, TRAILING empty cells stripped — the xlsx reader
-    * drops them, so the raw write-side padding would make every
-    * read/write round trip look dirty) — the change-detection key for
-    * the per-sheet push skip. The length prefix makes the serialization
-    * injective: catalog stats sheets carry arbitrary user-string min/max
-    * values, so in-band separators alone could make two DIFFERENT sheet
-    * states hash equal (["ab"] vs ["a","b"]) and silently skip a
-    * changed sheet (r8 advice).
+  /** write the changed sheets, or refuse with a
+    * ConcurrentModificationException (committing nothing) when another
+    * writer advanced the lake since this session's base
     */
-  private def sheetDigest(rows: Seq[Seq[String]]): String = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-    val lenBuf = java.nio.ByteBuffer.allocate(4)
-    rows.foreach { r =>
-      val canon = r.reverse.dropWhile(_.isEmpty).reverse
-      canon.foreach { c =>
-        val bytes = c.getBytes("UTF-8")
-        lenBuf.clear(); lenBuf.putInt(bytes.length)
-        d.update(lenBuf.array()); d.update(bytes)
-      }
-      lenBuf.clear(); lenBuf.putInt(-1) // row terminator, no cell has length -1
-      d.update(lenBuf.array())
-    }
-    java.util.Base64.getEncoder.encodeToString(d.digest())
-  }
-
-
-  /** max snapshot_id currently on the remote's snapshot sheet; None when
-    * the workbook/sheet is absent or carries no data rows
-    */
-  private def remoteSnapshotHead(): Option[Long] =
-    remote.readSheet(CatalogSchema.sheetName("ducklake_snapshot")).flatMap { rows =>
-      rows.headOption.flatMap { header =>
-        val idx = header.indexWhere(_.trim == "snapshot_id")
-        if (idx < 0) None
-        else rows.tail
-          .flatMap(r => r.lift(idx).map(_.trim).filter(_.nonEmpty))
-          .flatMap(v => scala.util.Try(CatalogState.asLong(v)).toOption)
-          .maxOption
-      }
-    }
-
-  /** CatalogState -> xlsx, full rewrite of every sheet (reference
-    * _push, ducklakexl.py:512-582), atomically — WITH an
-    * optimistic-concurrency gate the reference lacks (its README
-    * documents last-push-wins as a known non-ACID caveat,
-    * reference README.md:150-156): the push re-reads the remote's
-    * snapshot head and refuses to overwrite a lake that advanced past
-    * this session's pull base. A rejected push commits NOTHING — local
-    * data files written during the statement stay orphaned on disk
-    * (never referenced by the remote catalog, so harmless; DuckLake's
-    * scheduled-deletion sweep is the cleanup path) and the remedy is to
-    * re-run the statement: `sql()` re-pulls a fresh base first.
-    */
-  /** ONE-SHOT test seam: runs at the next push() entry, then clears —
-    * lets a spec interleave a racing writer exactly between this
-    * session's pull and its push (ConcurrencySpec's auto-retry case)
-    */
-  @volatile private[graft] var onBeforePush: () => Unit = () => ()
-
   def push(): Unit = {
-    // null during the constructor's bootstrap push (initialize() runs
-    // before this field's initializer)
     val hook = onBeforePush
     onBeforePush = () => ()
-    if (hook != null) hook()
-    if (baseSnapshot >= 0 && remote.exists) {
-      remoteSnapshotHead().foreach { head =>
-        if (head != baseSnapshot)
-          throw new java.util.ConcurrentModificationException(
-            s"stale push rejected: this session pulled snapshot $baseSnapshot " +
-              s"but the lake has advanced to snapshot $head (another writer " +
-              "pushed since). Nothing was committed; re-run the statement to " +
-              "retry on a fresh pull.")
-      }
-    }
-    // per-sheet change skip (beyond the reference, whose README lists
-    // change detection as a TODO): only sheets whose content differs from
-    // the pull base are pushed. Correctness is unchanged — the skipped
-    // sheets hold EXACTLY the bytes the remote already has (md5-compared
-    // against the pulled content) and the CAS gate above has verified no
-    // other writer advanced the lake meanwhile.
-    val sheets = state.toSheets.map(s => (s.name, s.rows))
-    val dirty = sheets.collect {
-      case (n, rows) if !pulledDigest.get(n).contains(sheetDigest(rows)) => n
-    }.toSet
-    if (dirty.nonEmpty) remote.writeChanged(sheets, dirty)
-    pulledDigest = sheets.map { case (n, rows) => n -> sheetDigest(rows) }.toMap
-    baseSnapshot = state.currentSnapshot
+    hook()
+    sync.push(state)
+  }
+
+  /** THE commit bracket every catalog write runs in (reference `sql`,
+    * ducklakexl.py:387-397): pull a fresh base when the workbook exists,
+    * run `body` on it, push the result. `body` must not `return`: a
+    * non-local return throws past the push and drops the commit.
+    */
+  private def withCatalogSync[A](body: => A): A = {
+    sync.pullIfPresent().foreach(state = _)
+    val out = body
+    push()
+    out
   }
 
   // ------------------------------------------------------------ query API
   /** THE query path (reference `sql`, ducklakexl.py:387-397):
     * pull -> execute statements -> push -> return last SELECT's DataFrame.
-    * With [[casAutoRetry]] (default), a stale-push CAS rejection triggers
-    * ONE transparent replay of the whole script on a freshly pulled base
-    * — the rejected attempt committed nothing, so the replay is exactly
-    * the documented manual remedy ("re-run the statement"), automated.
+    * A stale-push CAS rejection triggers ONE transparent replay of the
+    * whole script on a freshly pulled base (bounded — a second rejection
+    * propagates). The rejected attempt committed nothing, so the replay
+    * is exactly the documented manual remedy ("re-run the statement"),
+    * automated; its orphaned data files are the scheduled-deletion
+    * sweep's.
     */
   def sql(script: String): DataFrame = withLakeConfs {
     val macrosBefore = macros
@@ -574,7 +476,7 @@ class DuckLakeXLSpark(
     val tempBefore = tempTables
     try sqlOnce(script)
     catch {
-      case _: java.util.ConcurrentModificationException if casAutoRetry =>
+      case _: java.util.ConcurrentModificationException =>
         // the rejected attempt committed nothing; roll session macro +
         // prepared-statement + temp-table registrations back too so the
         // replayed script re-runs cleanly
@@ -709,8 +611,7 @@ class DuckLakeXLSpark(
     last
   }
 
-  private def sqlOnce(script: String): DataFrame = {
-    if (remote.exists) pull()
+  private def sqlOnce(script: String): DataFrame = withCatalogSync {
     registerViews()
     var last: Option[DataFrame] = None
     // explicit-transaction scope: BEGIN snapshots (catalog, macros,
@@ -1073,7 +974,6 @@ class DuckLakeXLSpark(
         "script-scoped — COMMIT or ROLLBACK before the script ends " +
         "(uncommitted writes were rolled back, not committed)")
     }
-    push()
     last.getOrElse(spark.emptyDataFrame)
   }
 
@@ -2555,9 +2455,9 @@ class DuckLakeXLSpark(
               targets.filter(t => t.endsWith("/" + rel) || t == rel) match {
                 case Seq(one) => Some(p -> one)
                 case Seq() =>
-                  System.err.println(s"[ducklakexl] positional delete row target " +
-                    s"'$p' matches no live data file of this table " +
-                    s"(stale/out-of-scope target) — rows for it are ignored")
+                  DuckLakeXLSpark.log.warn("positional delete row target '{}' " +
+                    "matches no live data file of this table (stale/out-of-scope " +
+                    "target) — rows for it are ignored", p)
                   None
                 case many => throw new IllegalArgumentException(
                   s"positional delete file references '$p', which is AMBIGUOUS: " +
@@ -2725,26 +2625,23 @@ class DuckLakeXLSpark(
 
   private[graft] def appendStreamBatch(table: String, batch: DataFrame,
       batchId: Long): Unit = synchronized {
-    def once(): Unit = {
-      if (remote.exists) pull()
+    def once(): Unit = withCatalogSync {
       val key = s"stream_batch:$table"
       val committed = state.metadata.find(_._1 == key).map(_._2.toLong)
-      if (committed.exists(_ >= batchId)) return // replayed batch — skip
-      val pre = state.currentSnapshot
-      executeInsertDF(table, None, batch)
-      val post = state.currentSnapshot
-      state = state.copy(
-        metadata = state.metadata.filterNot(_._1 == key) :+ (key -> batchId.toString),
-        snapshotChanges = state.snapshotChanges ++
-          ((pre + 1) to post).map(SnapshotChangeRow(_,
-            s"inserted_into_table:${splitQual(table)._2}")))
-      registerViews()
-      push()
+      if (!committed.exists(_ >= batchId)) { // else a replayed batch: skip
+        val pre = state.currentSnapshot
+        executeInsertDF(table, None, batch)
+        val post = state.currentSnapshot
+        state = state.copy(
+          metadata = state.metadata.filterNot(_._1 == key) :+ (key -> batchId.toString),
+          snapshotChanges = state.snapshotChanges ++
+            ((pre + 1) to post).map(SnapshotChangeRow(_,
+              s"inserted_into_table:${splitQual(table)._2}")))
+        registerViews()
+      }
     }
     try once()
-    catch {
-      case _: java.util.ConcurrentModificationException if casAutoRetry => once()
-    }
+    catch { case _: java.util.ConcurrentModificationException => once() }
   }
 
   /** `SHOW TABLES`: live tables and views, like the DuckDB pass-through */
@@ -3176,7 +3073,7 @@ class DuckLakeXLSpark(
         .foreach { v =>
           try sqlSelect((v.sql)).createOrReplaceTempView(v.viewName)
           catch { case e: Exception =>
-            System.err.println(s"[ducklakexl] view ${v.viewName} skipped: ${e.getMessage}")
+            DuckLakeXLSpark.log.warn("view {} skipped: {}", v.viewName, e.getMessage)
           }
         }
     }
@@ -3527,8 +3424,7 @@ class DuckLakeXLSpark(
     * builder's truncate (INSERT OVERWRITE)
     */
   private[graft] def insertFromCatalog(schemaName: String, table: String,
-      df: DataFrame, overwrite: Boolean): Unit = {
-    if (remote.exists) pull()
+      df: DataFrame, overwrite: Boolean): Unit = withCatalogSync {
     val qname = s"$schemaName.$table"
     val pre = state.currentSnapshot
     if (overwrite) executeDelete(StatementRouter.Delete(qname, None))
@@ -3538,7 +3434,6 @@ class DuckLakeXLSpark(
       state = state.copy(snapshotChanges = state.snapshotChanges ++
         ((pre + 1) to post).map(SnapshotChangeRow(_, s"inserted_into_table:$table")))
     registerViews()
-    push()
   }
 
   private def executeCtas(s: StatementRouter.CreateTableAs): Unit = {
@@ -4798,30 +4693,35 @@ class DuckLakeXLSpark(
     * them falls back to the (still-recorded) min/max column stats.
     */
   def compact(table: String, targetBytes: Long = 128L << 20,
-      sortBy: Seq[String] = Nil): Unit = {
-    if (remote.exists) pull()
+      sortBy: Seq[String] = Nil): Unit = withCatalogSync {
     val t = requireTable(table)
+    // the flushes commit on their own: with nothing left to merge below,
+    // the bracket still pushes them
     flushInlined(t)
     flushForeignDeletes(t)
     val schema = state.schemaOf(t.tableId)
-    val cols = state.columnsOf(t.tableId)
-    if (sortBy.nonEmpty) { compactSorted(t, targetBytes, sortBy, schema); return }
-    val small = state.filesOf(t.tableId).filter(_.fileSizeBytes < targetBytes)
-    if (small.size <= 1) return
-    // sequential bin-pack of the small tail into ~targetBytes groups
-    val groups = scala.collection.mutable.ArrayBuffer[Vector[DataFileRow]]()
-    var cur = Vector.empty[DataFileRow]
-    var curSz = 0L
-    small.foreach { f =>
-      if (cur.nonEmpty && curSz + f.fileSizeBytes > targetBytes) {
-        groups += cur; cur = Vector.empty; curSz = 0L
+    if (sortBy.nonEmpty) compactSorted(t, targetBytes, sortBy, schema)
+    else {
+      // sequential bin-pack of the small tail into ~targetBytes groups
+      val groups = scala.collection.mutable.ArrayBuffer[Vector[DataFileRow]]()
+      var cur = Vector.empty[DataFileRow]
+      var curSz = 0L
+      state.filesOf(t.tableId).filter(_.fileSizeBytes < targetBytes).foreach { f =>
+        if (cur.nonEmpty && curSz + f.fileSizeBytes > targetBytes) {
+          groups += cur; cur = Vector.empty; curSz = 0L
+        }
+        cur :+= f
+        curSz += f.fileSizeBytes
       }
-      cur :+= f
-      curSz += f.fileSizeBytes
+      if (cur.nonEmpty) groups += cur
+      val toMerge = groups.filter(_.size >= 2).toSeq
+      if (toMerge.nonEmpty) compactGroups(t, toMerge, schema)
     }
-    if (cur.nonEmpty) groups += cur
-    val toMerge = groups.filter(_.size >= 2)
-    if (toMerge.isEmpty) return
+  }
+
+  /** ONE rewrite job merging each bin-packed group into one file */
+  private def compactGroups(t: TableRow, toMerge: Seq[Vector[DataFileRow]],
+      schema: StructType): Unit = {
     val snap = state.currentSnapshot + 1
     val fid = state.nextFileId
     // ONE rewrite job for ALL groups (the per-group-job version was the
@@ -4892,7 +4792,7 @@ class DuckLakeXLSpark(
 
   /** shared compact tail: move the __grp=* outputs to stable names, end
     * the merged files' lifetimes, derive stats, verify every input row
-    * survived, commit the snapshot, push
+    * survived, commit the snapshot (compact's bracket pushes it)
     */
   private def commitCompactOutputs(t: TableRow, snap: Long, fid: Long,
       tmp: java.nio.file.Path, mergeIds: Set[Long], mergedCnt: Long,
@@ -4931,7 +4831,6 @@ class DuckLakeXLSpark(
     state = ns2
     newSnapshot(state.nextCatalogId, fid2)
     registerViews()
-    push()
   }
 
   /** Register EXISTING parquet files into `table` WITHOUT rewriting them
@@ -4949,8 +4848,7 @@ class DuckLakeXLSpark(
     * no data is copied, which is the point at 100 TB: registering an
     * existing lake is a metadata operation.
     */
-  def addDataFiles(table: String, paths: Seq[String]): Unit = {
-    if (remote.exists) pull()
+  def addDataFiles(table: String, paths: Seq[String]): Unit = withCatalogSync {
     val t = requireTable(table)
     flushInlined(t)
     val cols = state.columnsOf(t.tableId)
@@ -5020,7 +4918,6 @@ class DuckLakeXLSpark(
     state = state.copy(tableStats = bumpStats(t.tableId, added))
     newSnapshot(nextId, fid)
     registerViews()
-    push()
   }
 
   /** Retention maintenance (DuckLake `expire_snapshots`): drop time travel
@@ -5031,8 +4928,7 @@ class DuckLakeXLSpark(
     * [[vacuum]] (two-phase, so a crash between the two never loses live
     * data — the worst case is an orphan file still on disk).
     */
-  def expireSnapshots(keepFrom: Long): Unit = {
-    if (remote.exists) pull()
+  def expireSnapshots(keepFrom: Long): Unit = withCatalogSync {
     require(keepFrom <= state.currentSnapshot,
       s"keepFrom $keepFrom is beyond the current snapshot ${state.currentSnapshot}")
     val now = tsFmt.format(Instant.now().truncatedTo(ChronoUnit.SECONDS))
@@ -5048,18 +4944,12 @@ class DuckLakeXLSpark(
       inlinedData = state.inlinedData.filterNot(_.endSnapshot.exists(_ <= keepFrom)),
       scheduledDeletes = state.scheduledDeletes ++ dead.map(f =>
         ScheduledDeleteRow(f.dataFileId, f.tableId, f.path, now)))
-    push()
   }
 
   /** physically delete every scheduled file and clear the sheet; returns
     * how many files were removed
     */
-  def vacuum(): Int = {
-    if (remote.exists) pull()
-    val n = vacuumLocal()
-    push()
-    n
-  }
+  def vacuum(): Int = withCatalogSync(vacuumLocal())
 
   /** the physical-delete core over the CURRENT in-memory state, no sync —
     * the `VACUUM` statement arm runs inside sqlOnce's pull→…→push bracket,
@@ -5185,6 +5075,8 @@ class DuckLakeXLSpark(
   * [[DuckLakeXLSpark.rewriteSelect]])
   */
 object DuckLakeXLSpark {
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[DuckLakeXLSpark])
+
   /** JVM-global sequence for direct-file-query temp-view names — see
     * registerFileRead's uniqueness note
     */

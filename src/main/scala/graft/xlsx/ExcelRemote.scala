@@ -10,10 +10,11 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 
 /** The workbook transport abstraction (reference `_pick_client`,
-  * ducklakexl.py:85-97): the catalog sync layer only needs these five
-  * operations, so local-file and Microsoft-Graph workbooks are
-  * interchangeable behind them — exactly how the reference treats its two
-  * modes (same pull/push, different IO: ducklakexl.py:424-456,527-536).
+  * ducklakexl.py:85-97): the catalog sync layer
+  * ([[graft.lake.CatalogSync]]) only needs these six operations, so
+  * local-file and Microsoft-Graph workbooks are interchangeable behind
+  * them — exactly how the reference treats its two modes (same
+  * pull/push, different IO: ducklakexl.py:424-456,527-536).
   */
 trait ExcelRemote {
   def exists: Boolean
@@ -95,6 +96,7 @@ final class GraphRemote(
     .connectTimeout(java.time.Duration.ofSeconds(30)).build()
   private val requestTimeout = java.time.Duration.ofSeconds(120)
   private val mapper = new ObjectMapper()
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[GraphRemote])
   @volatile private var cachedItemId: Option[String] = None
 
   // each path segment percent-encodes (spaces, '#', unicode) — a raw
@@ -243,11 +245,11 @@ final class GraphRemote(
           // one more grace period before closeSession runs regardless.
           pool.shutdownNow()
           if (!pool.awaitTermination(30, java.util.concurrent.TimeUnit.SECONDS)) {
-            System.err.println("[ducklakexl] readAll: cancelled sheet reads " +
+            log.warn("readAll: cancelled sheet reads " +
               "did not terminate within 30s; extending wait before closing " +
               "the workbook session")
             if (!pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS))
-              System.err.println("[ducklakexl] readAll: sheet reads STILL " +
+              log.warn("readAll: sheet reads STILL " +
                 "running after 90s; closing the session anyway — a late " +
                 "response may hit a closed session (harmless 404)")
           }

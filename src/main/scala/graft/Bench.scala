@@ -98,7 +98,7 @@ object Bench {
     * track the core ratio. Both compute from the parquet inputs on every
     * invocation — nothing is precomputed or cached across runs.
     */
-  private def extraBench: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private[graft] def extraBench: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_events_tumbling_batch" -> { (s, d) =>
       graft.ops.Tables.t(s, d, "events")
         .groupBy(date_trunc("hour", col("ts")).as("win_start"), col("event_type"))
@@ -112,11 +112,10 @@ object Bench {
 
   private[graft] def runInProcess(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    // the shared session (GraftSession: cores, partitions, UTC, no UI,
+    // cached-plan coalescing — the very confs Verify plans with) plus the
+    // bench's own lines
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // split scans to ~2 waves on local[32] test data: a single ~1 GB
@@ -127,18 +126,7 @@ object Bench {
       // default is right — this sizes splits to THIS harness's
       // data-per-core, it is not a 100 TB recommendation.
       .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.ui.enabled", "false")
-    // r19: cached-plan AQE coalescing; since r20 shared with Verify via
-    // GraftSession (VERDICT r19 item 4 / ADVICE: bench and oracle
-    // sessions must plan identically). See GraftSession for the why.
-    GraftSession.defaults(builder)
-    // one-off conf experiments (r14 AQE-lever probes):
-    // SPARK_GRAFT_EXTRA_CONF="k=v;k=v" — NOT used by driver runs
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      builder.config(k.trim, v.trim)
-    })
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val benchable0 = SparkEntry.queries.view

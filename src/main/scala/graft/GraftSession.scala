@@ -2,11 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session defaults shared by every main that builds a session over the
-  * graft query paths (Bench, Verify). Exists so the bench and the
+/** The one session builder for every main that runs the graft query
+  * paths (Verify, Bench, the `graft.tools` mains), so the bench and the
   * oracle/verify sessions exercise the SAME planner configuration
   * (ADVICE r19: the configs had diverged — the cached-plan coalescing
-  * conf lived only in the bench session).
+  * conf lived only in the bench session). `Smoke` alone stays a bare
+  * session: it reproduces the driver's t1 call, which sets no confs.
   */
 object GraftSession {
   /** Library query paths persist shared intermediates (minhashPairs'
@@ -22,10 +23,21 @@ object GraftSession {
   val CachedPlanCoalescing =
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 
-  /** Applied by Bench and Verify (VERDICT r19 item 4: promote the conf
-    * out of the bench-only session so non-bench sessions plan the same
-    * way the bench measured).
+  /** The planner confs every graft session carries (VERDICT r19 item 4:
+    * promote the conf out of the bench-only session so non-bench
+    * sessions plan the same way the bench measured).
     */
   def defaults(b: SparkSession.Builder): SparkSession.Builder =
     b.config(CachedPlanCoalescing, "true")
+
+  /** A local session on `cpus` cores with one shuffle partition per core,
+    * UTC session time, no UI, and [[defaults]]. Callers add only the
+    * confs that are theirs (Bench: its AQE and scan-split lines).
+    */
+  def local(cpus: Int): SparkSession.Builder =
+    defaults(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false"))
 }

@@ -17,8 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * one JVM pass per ROW behind a single static call that whole-stage
   * codegen inlines — the "(b) custom Expression" rung of the operator
   * ladder, reached only after the built-in shapes were measured as the
-  * bottleneck (graft.Probe `ngram`: gram construction 1.95 s + md5 1.1 s
-  * of q_llm_dedup_ngram's 2.4 s at sf0.1).
+  * bottleneck (measured r7: gram construction 1.95 s + md5 1.1 s of
+  * q_llm_dedup_ngram's 2.4 s at sf0.1; SCALE.md §5, MinHash row).
   *
   * Every formula is BIT-IDENTICAL to the built-in chain it replaces (and
   * so to the DuckDB oracle twins, which are unchanged):

@@ -32,8 +32,9 @@ object QueriesFunctions {
     // (Catalyst pushes the pruning below the Sort, the computing Project
     // stays above), and (c) parallelizes the compute across all cores
     // even over a single-partition source (single-row-group files).
-    // Probe `sortproj`: q_fn_math 1.44 -> 0.73 s at sf0.1. Semantically a
-    // no-op — Project preserves its child's row order.
+    // Measured r7: q_fn_math 1.44 -> 0.73 s at sf0.1 (OPTIMIZATION_r19.md,
+    // "q_fn_*" residuals). Semantically a no-op — Project preserves its
+    // child's row order.
     "q_fn_string" -> { (s, d) =>
       val c = Tables.t(s, d, "customer")
       c.orderBy("c_custkey").select(

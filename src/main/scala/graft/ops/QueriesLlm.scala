@@ -54,8 +54,8 @@ object QueriesLlm {
       .exists(_.equalsIgnoreCase("xxhash64"))
 
   // ---------------------------------------------------------- constants
-  private[ops] val NumHashes = 16
-  private[ops] val Bands = 8 // 2 minhash rows per band
+  private[graft] val NumHashes = 16
+  private[graft] val Bands = 8 // 2 minhash rows per band
   private val JacThreshold = 0.5
   private val ShingleWords = 5
 
@@ -68,8 +68,8 @@ object QueriesLlm {
   private val NgramStride = 2
   /** keep only gram hashes ≡ 0 (mod k): a deterministic 1/k sketch */
   private val NgramSampleMod = 4
-  private[ops] val NgramHashes = 16
-  private[ops] val NgramBands = 4 // 4 minhash rows per band
+  private[graft] val NgramHashes = 16
+  private[graft] val NgramBands = 4 // 4 minhash rows per band
   private val NgramThreshold = 0.8
 
   /** bucket-size cap for the MinHash band buckets (LSH hygiene, see
@@ -78,7 +78,7 @@ object QueriesLlm {
     * regression (tools/bench_close.py, r19) — production paths never
     * set it.
     */
-  private[ops] val MaxBucket =
+  private[graft] val MaxBucket =
     sys.env.get("SPARK_GRAFT_MAXBUCKET").map(_.toInt).getOrElse(100)
 
   /** the ngram stream's bucket cap. The 4×4 band structure gives a pair
@@ -90,7 +90,7 @@ object QueriesLlm {
     * candidate bound stays linear (entries·(cap−1)/2) — recall
     * re-measured at 0.9939 (RECALL_r18_final_sf10.jsonl).
     */
-  private[ops] val NgramMaxBucket = 200
+  private[graft] val NgramMaxBucket = 200
 
   // 64-bit SimHash (Manku's config): 2 bits per md5 hex digit — bit 3 of
   // digit d for even sig bits, bit 2 for odd — banded 4×16 bits, so any
@@ -475,9 +475,9 @@ object QueriesLlm {
     * pair is missed only if the two docs share NO gram with df ≤ cap in
     * any sampled posting — pure cross-corpus boilerplate. Recall is
     * measured, not asserted: `ContainRecallSpec` at sf0.1 and
-    * [[RecallAudit]] at sf1/sf10.
+    * `graft.tools.RecallAudit` at sf1/sf10.
     */
-  private[ops] def containPairs(sh: DataFrame, cap: Int,
+  private[graft] def containPairs(sh: DataFrame, cap: Int,
       thr: Double = 0.9): DataFrame = {
     val posts = cappedIdListsSampled(
       sh.select(col("doc_id"), explode(col("hs")).as("h")),
@@ -636,7 +636,7 @@ object QueriesLlm {
   /** word-5-shingle hash sets (docs with <5 words have no shingles and
     * drop out — they cannot be near-dups)
     */
-  private[ops] def shinglesDF(s: SparkSession, d: String): DataFrame = {
+  private[graft] def shinglesDF(s: SparkSession, d: String): DataFrame = {
     // shingle construction + hashing in ONE native pass per doc
     // (graft.functions.HashedGrams — bit-identical to the former
     // transform/concat_ws/md5 chain, TextSketchSpec): the single-spaced
@@ -675,7 +675,7 @@ object QueriesLlm {
     *    At 100 TB these knobs are precisely the ones you'd turn: both
     *    scale per-doc cost, not corpus-shuffle cost.
     */
-  private[ops] def ngramsDF(s: SparkSession, d: String,
+  private[graft] def ngramsDF(s: SparkSession, d: String,
       stride: Int = NgramStride, sampleMod: Int = NgramSampleMod): DataFrame = {
     val docs = Tables.t(s, d, "documents")
       .select(col("doc_id"), normText(col("text")).as("norm"))
@@ -690,7 +690,8 @@ object QueriesLlm {
     // gram slicing + md5 + distinct + mod-sample fused into ONE native
     // pass per doc (graft.functions.HashedGrams; bit-identical to the
     // former substr/md5/conv/array_distinct/filter chain — TextSketchSpec.
-    // Probe `ngram`: that interpreted chain alone cost 1.9-3.0 s at sf0.1)
+    // That interpreted chain alone cost 1.9-3.0 s at sf0.1, measured r7;
+    // SCALE.md §5, MinHash row)
     docs.select(col("doc_id"),
       graft.functions.TextSketch.hashedCharGramsCol(
         col("norm"), NgramLen, stride, sampleMod, xx = xxMode(s)).as("hs"))
@@ -714,15 +715,15 @@ object QueriesLlm {
     * consumers (bands, both est-filter sides, both verify sides); one
     * spill-safe materialization is the 100 TB shape.
     */
-  private[ops] def minhashPairs(shIn: DataFrame, numHashes: Int, bands: Int,
+  private[graft] def minhashPairs(shIn: DataFrame, numHashes: Int, bands: Int,
       thr: Double, maxBucket: Int = MaxBucket,
-      ordered: Boolean = true, materialize: Boolean = true): DataFrame = {
+      ordered: Boolean = true): DataFrame = {
     val rows = numHashes / bands
     // minhashes from the universal-hash family (a_i * x + b_i) mod P over
     // each doc's gram hashes (see [[HashP]]) — per-row expressions only.
     // The r5-verdict "single aggregate fold with a 16-field struct
     // accumulator" was built and MEASURED SLOWER (3.67 s vs 3.37 s for the
-    // sweeps over the identical input, graft.Probe doc_sig16_*): the fold
+    // sweeps over the identical input, sf0.1, local[32]): the fold
     // allocates a struct per ELEMENT in the interpreted higher-order-
     // function path, which outweighs the saved array traversals. Kept the
     // sweeps; the real ngram lever is gram-set sampling (see [[ngramsDF]]).
@@ -861,18 +862,7 @@ object QueriesLlm {
     // immediately re-aggregate, so for them `ordered = false` skips a
     // range exchange + its sampling job per query — the pair SET is
     // unchanged and every consumer's own final ORDER BY still runs.
-    val out0 = if (ordered) verified.orderBy("a", "b") else verified
-    // tools-only (plan evidence, R19PlanDump): `materialize = false`
-    // returns the DAG pre-checkpoint so explain() can show the pipeline
-    // (the checkpointed result explains as one Scan ExistingRDD). Every
-    // query path keeps the default. r20 (ADVICE r19): unpersist the two
-    // lazily-persisted handles before the early return — nothing was
-    // materialized yet, so this only unregisters them; the caller gets a
-    // plain DAG with no cache entry left behind (explain() shows the raw
-    // pipeline rather than InMemoryRelation nodes, which is what a plan
-    // dump wants anyway).
-    if (!materialize) { sh.unpersist(); grouped.unpersist(); return out0 }
-    val out = out0
+    val out = (if (ordered) verified.orderBy("a", "b") else verified)
       // materialize the (output-sized) pair set on executor-local storage
       // and release the corpus-scale shingle cache BEFORE returning, so a
       // user session holds no corpus-sized cache after the call. Local
@@ -968,8 +958,8 @@ object QueriesLlm {
     * output-sized) and all superstep caches are released before return.
     *
     * Three strategies are kept so the choice stays measured, not asserted
-    * (graft.Probe `cc_*`; sf0.1, local[32], warm, same checkpointed pair
-    * input — so the numbers isolate the superstep loop):
+    * (SCALE.md §5, dedup-clustering row; sf0.1, local[32], warm, same
+    * checkpointed pair input — so the numbers isolate the superstep loop):
     *  - [[ccMinLabel]] — one-hop min-label propagation, the r5/r6 shape:
     *    O(diameter) supersteps of join + min-agg. Measured 0.99 s.
     *  - [[ccTwoHop]] — the same propagation fused two hops per Spark job.

@@ -1,8 +1,11 @@
-package graft.ops
+package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
+
+import graft.GraftSession
+import graft.ops.{QueriesLlm, Tables}
 
 /** Ground-truth RECALL audit for the near-dup streams (r18, VERDICT r17
   * task 2).
@@ -45,10 +48,10 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * true singletons (families whose text is too short to survive the
   * marker suffix at the 0.5 threshold), not cap victims.
   *
-  * Usage: SPARK_GRAFT_SF_DIR=<dir> runMain graft.ops.RecallAudit
-  * Prints one JSON line per stream (grep "RECALLAUDIT"). Driver-side
-  * evidence tool, same pattern as [[LshAudit]] / [[PairCount]]; results
-  * land in SCALE.md §6.22 and bench_archive/RECALL_r18_*.json.
+  * Usage: SPARK_GRAFT_SF_DIR=<dir> runMain graft.tools.RecallAudit
+  * Prints one JSON line per stream (grep "RECALLAUDIT"); the close
+  * protocol's recall gate (tools/bench_close.py) parses those lines.
+  * Results land in SCALE.md §6.22 and bench_archive/RECALL_*.jsonl.
   */
 object RecallAudit {
   private val FamRange = 1000000L // DOC_RANGE in tools/bench_sf1.py
@@ -107,10 +110,8 @@ object RecallAudit {
 
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf10")
-    val spark = SparkSession.builder().master("local[32]")
+    val spark = GraftSession.local(32)
       .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .appName("recall-audit").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {

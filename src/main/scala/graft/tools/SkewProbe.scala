@@ -1,8 +1,11 @@
-package graft.ops
+package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
+import graft.ops.Tables
 
 /** Tools-only (NOT a query path): the VERDICT r19 item-3 skew probe for
   * the window-df spellings of boilerplate / segment_dedup.
@@ -18,7 +21,7 @@ import org.apache.spark.sql.functions._
   *     observed (the straggler witness);
   *   - wall seconds of each spelling (noop sink).
   *
-  * Usage: sbt "runMain graft.ops.SkewProbe [nDocs]"   (default 200000)
+  * Usage: sbt "runMain graft.tools.SkewProbe [nDocs] [sf]"   (default 200000)
   */
 object SkewProbe {
   private final class TaskMax extends org.apache.spark.scheduler.SparkListener {
@@ -36,12 +39,7 @@ object SkewProbe {
 
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toInt).getOrElse(200000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.defaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Plan-shape regression guards: the explain shapes the 100 TB posture
   * depends on (pushdown, broadcast, top-k short-circuit, partial
   * aggregation, no accidental cartesian products) asserted as tests, not
-  * just printed by PlanAudit.
+  * just printed by `graft.tools.PlanAudit`.
   */
 class PlanShapeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark

@@ -2,18 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** one shared local session for all suites (sbt test forks a single JVM) */
+/** one shared local session for all suites (sbt test forks a single JVM),
+  * built like the Bench and Verify sessions (GraftSession.local)
+  */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    // r20: GraftSession.defaults so tests plan with the same cached-plan
-    // AQE coalescing the Bench and Verify sessions use (ADVICE r19).
-    val s = GraftSession.defaults(SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val s = GraftSession.local(4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

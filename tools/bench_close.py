@@ -105,14 +105,14 @@ def main():
     if not a.no_recall:
         recall_floors = {"word_minhash": 0.999, "contain": 0.9999,
                          "ngram_minhash": 0.995}
-        print("recall-regression gate (graft.ops.RecallAudit @ sf1)...")
+        print("recall-regression gate (graft.tools.RecallAudit @ sf1)...")
         if not pathlib.Path("/tmp/graft_sf1/documents.parquet").exists():
             raise SystemExit("/tmp/graft_sf1 missing — regenerate via "
                              "tools/bench_sf1.py before closing")
         env = {**__import__("os").environ,
                "SPARK_GRAFT_SF_DIR": "/tmp/graft_sf1"}
         r = subprocess.run([str(REPO / "tools" / "run_main.sh"),
-                            "graft.ops.RecallAudit", "24g"],
+                            "graft.tools.RecallAudit", "24g"],
                            capture_output=True, text=True, env=env)
         lines = [ln.split("RECALLAUDIT ", 1)[1]
                  for ln in r.stdout.splitlines() if "RECALLAUDIT " in ln]

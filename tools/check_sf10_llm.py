@@ -25,6 +25,7 @@ from bench_sf1_llm import TOP10  # noqa: E402
 
 SF_DIR = "/tmp/graft_sf10"
 OUT_DIR = "/tmp/verify_sf10_llm"
+BOARD = Path(__file__).resolve().parent.parent / "CORRECTNESS_SF10_LLM.json"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
@@ -131,7 +132,8 @@ def main():
                   "q_llm_dedup_contain", "q_llm_split_leakfree",
                   "q_llm_dedup_keep_best", "q_llm_pipeline_e2e",
                   "q_llm_dedup_cluster", "q_llm_copy_detect"]
-    ordered = [q for q in cost_order if q in TOP10] +         [q for q in TOP10 if q not in cost_order]
+    ordered = [q for q in cost_order if q in TOP10] + \
+        [q for q in TOP10 if q not in cost_order]
 
     def write_board(partial):
         out = {"sf": SF_DIR, "docs": 500000, "partial": partial,
@@ -141,14 +143,14 @@ def main():
                "the r18 truncate/ring/exact-contain paths fire; "
                "order/type-lint driver-checked at sf0.01",
                "pass": n_pass, "fail": n_fail, "queries": board}
-        Path("/root/repo/CORRECTNESS_SF10_LLM.json").write_text(
-            json.dumps(out, indent=1, sort_keys=True))
+        BOARD.write_text(json.dumps(out, indent=1, sort_keys=True))
 
     for name in ordered:
         if name not in oracle_sql:
             n_fail += 1
             board[name] = {"hash_match": False, "err": "NO ORACLE SQL"}
             print(f"FAIL {name}: no oracle sql")
+            write_board(True)
             continue
         err, sn, on, secs = compare(name, con, oracle_sql[name])
         if err:
@@ -166,13 +168,8 @@ def main():
                            "hash_match": True, "spark_rows": sn,
                            "oracle_rows": on, "err": None,
                            "sec": round(secs, 2)}
-    out = {"sf": SF_DIR, "docs": 500000,
-           "method": "duckdb multiset (md5 row-hash count-vectors, EXCEPT both directions) + "
-           "rowcount at sf10 density where the r18 truncate/ring/"
-           "exact-contain paths fire; order/type-lint driver-checked at "
-           "sf0.01", "pass": n_pass, "fail": n_fail, "queries": board}
-    Path("/root/repo/CORRECTNESS_SF10_LLM.json").write_text(
-        json.dumps(out, indent=1, sort_keys=True))
+        write_board(True)
+    write_board(False)
     print("wrote CORRECTNESS_SF10_LLM.json")
     print(f"\n{n_pass} pass / {n_fail} fail")
     sys.exit(1 if n_fail else 0)

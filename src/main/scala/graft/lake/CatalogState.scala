@@ -797,15 +797,29 @@ object CatalogState {
     */
   private[lake] def inlineSheetName(tableId: Long): String = s"inlined_data_$tableId"
 
+  /** one data row seen through its sheet's header, read like a
+    * header -> cell map: `m(k)` throws on a header the sheet lacks,
+    * `getOrElse` falls back, a short row reads "", and a duplicate header
+    * resolves to its last column. `index` is built once per sheet.
+    */
+  private final class HeaderRow(index: Map[String, Int], cells: Seq[String]) {
+    def apply(k: String): String = index.getOrElse(k, -1) match {
+      case -1 => throw new NoSuchElementException(s"key not found: $k")
+      case i => cell(cells, i)
+    }
+    def getOrElse(k: String, d: String): String = index.getOrElse(k, -1) match {
+      case -1 => d
+      case i => cell(cells, i)
+    }
+  }
+
   def fromSheets(sheets: Seq[XlsxSheet]): CatalogState = {
     val byName = sheets.map(s => s.name -> s).toMap
-    def rowsOf(table: String): Seq[Map[String, String]] = {
+    def rowsOf(table: String): Seq[HeaderRow] = {
       byName.get(CatalogSchema.sheetName(table)) match {
         case Some(XlsxSheet(_, rows)) if rows.nonEmpty =>
-          val header = rows.head.map(_.trim)
-          rows.tail.filter(_.exists(_.nonEmpty)).map { r =>
-            header.zipWithIndex.map { case (h, i) => h -> cell(r, i) }.toMap
-          }
+          val index = rows.head.map(_.trim).zipWithIndex.toMap
+          rows.tail.filter(_.exists(_.nonEmpty)).map(new HeaderRow(index, _))
         case _ => Seq.empty
       }
     }

@@ -3,7 +3,7 @@ package graft.xlsx
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, NoSuchFileException, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -22,7 +22,9 @@ trait ExcelRemote {
   def readAll(): Seq[XlsxCodec.Sheet]
   /** one sheet's rows, or None when the workbook/sheet is absent — the
     * cheap probe the optimistic-concurrency push uses to compare the
-    * remote snapshot head against its pull base without a full readAll
+    * remote snapshot head against its pull base without a full readAll.
+    * Cheap on both transports: Graph reads one usedRange, a local file
+    * decodes only that sheet's part ([[XlsxCodec.readOne]]).
     */
   def readSheet(name: String): Option[Seq[Seq[String]]]
   /** full overwrite of the workbook (the reference's push semantics —
@@ -47,9 +49,10 @@ final class LocalXlsxRemote(path: String) extends ExcelRemote {
   def exists: Boolean = Files.exists(Paths.get(path))
   def sheetNames: Seq[String] = XlsxCodec.sheetNames(path)
   def readAll(): Seq[XlsxCodec.Sheet] = XlsxCodec.read(path)
+  /** a workbook that is absent, or vanishes before the zip opens, is None */
   def readSheet(name: String): Option[Seq[Seq[String]]] =
-    if (!exists) None
-    else XlsxCodec.read(path).collectFirst { case (n, rows) if n == name => rows }
+    try XlsxCodec.readOne(path, name)
+    catch { case _: NoSuchFileException => None }
   def writeAll(sheets: Seq[XlsxCodec.Sheet]): Unit = XlsxCodec.write(path, sheets)
 }
 

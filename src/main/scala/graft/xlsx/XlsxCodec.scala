@@ -6,6 +6,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.zip.{ZipEntry, ZipFile, ZipOutputStream}
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
 
+import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 
 /** Pure-JDK xlsx codec (java.util.zip + StAX) — no Apache POI available in
@@ -163,59 +164,67 @@ object XlsxCodec {
   private def slurp(zf: ZipFile, name: String): Option[InputStream] =
     Option(zf.getEntry(name)).map(zf.getInputStream)
 
+  /** one StAX factory per codec call (a `newInstance()` is a service
+    * lookup); external entities and DTDs off
+    */
+  private def xmlFactory(): XMLInputFactory = {
+    val f = XMLInputFactory.newInstance()
+    f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
+    f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
+    f
+  }
+
   /** sheet order + names from xl/workbook.xml (r:id order == part order
     * for our own files; for foreign files we resolve through the rels)
     */
   def sheetNames(path: String): Seq[String] = {
     val zf = new ZipFile(path)
-    try readWorkbookSheets(zf).map(_._1)
+    try readWorkbookSheets(xmlFactory(), zf).map(_._1)
     finally zf.close()
   }
 
   /** (name, relId) in declaration order */
-  private def readWorkbookSheets(zf: ZipFile): Seq[(String, String)] = {
+  private def readWorkbookSheets(f: XMLInputFactory, zf: ZipFile): IndexedSeq[(String, String)] = {
     val in = slurp(zf, "xl/workbook.xml")
       .getOrElse(throw new IllegalArgumentException("not an xlsx: missing xl/workbook.xml"))
-    val f = XMLInputFactory.newInstance()
-    f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-    f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
     val r = f.createXMLStreamReader(in)
     val out = mutable.ArrayBuffer[(String, String)]()
     try {
       while (r.hasNext) {
         if (r.next() == XMLStreamConstants.START_ELEMENT && r.getLocalName == "sheet") {
           var name = ""; var rid = ""
-          (0 until r.getAttributeCount).foreach { i =>
+          var i = 0
+          while (i < r.getAttributeCount) {
             r.getAttributeLocalName(i) match {
               case "name" => name = r.getAttributeValue(i)
               case "id"   => rid = r.getAttributeValue(i)
               case _      =>
             }
+            i += 1
           }
           out += ((name, rid))
         }
       }
     } finally { r.close(); in.close() }
-    out.toSeq
+    out.toIndexedSeq
   }
 
-  private def readRels(zf: ZipFile): Map[String, String] =
+  private def readRels(f: XMLInputFactory, zf: ZipFile): Map[String, String] =
     slurp(zf, "xl/_rels/workbook.xml.rels").map { in =>
-      val f = XMLInputFactory.newInstance()
-      f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-      f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
       val r = f.createXMLStreamReader(in)
       val m = mutable.Map[String, String]()
       try {
         while (r.hasNext) {
           if (r.next() == XMLStreamConstants.START_ELEMENT && r.getLocalName == "Relationship") {
             var id = ""; var target = ""
-            (0 until r.getAttributeCount).foreach { i =>
+            var i = 0
+            while (i < r.getAttributeCount) {
               r.getAttributeLocalName(i) match {
                 case "Id"     => id = r.getAttributeValue(i)
                 case "Target" => target = r.getAttributeValue(i)
                 case _        =>
               }
+              i += 1
             }
             m(id) = if (target.startsWith("/")) target.drop(1)
                     else "xl/" + target.stripPrefix("./")
@@ -225,14 +234,11 @@ object XlsxCodec {
       m.toMap
     }.getOrElse(Map.empty)
 
-  private def readSharedStrings(zf: ZipFile): IndexedSeq[String] =
+  private def readSharedStrings(f: XMLInputFactory, zf: ZipFile): IndexedSeq[String] =
     slurp(zf, "xl/sharedStrings.xml").map { in =>
-      val f = XMLInputFactory.newInstance()
-      f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-      f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
       val r = f.createXMLStreamReader(in)
       val out = mutable.ArrayBuffer[String]()
-      val cur = new StringBuilder
+      val cur = new java.lang.StringBuilder
       var inSi = false
       var inT = false
       var inRPh = 0 // phonetic-guide runs: their <t> is NOT cell text
@@ -241,13 +247,13 @@ object XlsxCodec {
           r.next() match {
             case XMLStreamConstants.START_ELEMENT =>
               r.getLocalName match {
-                case "si" => inSi = true; cur.clear()
+                case "si" => inSi = true; cur.setLength(0)
                 case "rPh" | "phoneticPr" => inRPh += 1
                 case "t" if inSi && inRPh == 0 => inT = true
                 case _ =>
               }
-            case XMLStreamConstants.CHARACTERS if inT =>
-              cur.append(r.getText) // rich-text runs concatenate
+            case XMLStreamConstants.CHARACTERS if inT => // rich-text runs concatenate
+              cur.append(r.getTextCharacters, r.getTextStart, r.getTextLength)
             case XMLStreamConstants.END_ELEMENT =>
               r.getLocalName match {
                 case "rPh" | "phoneticPr" => inRPh -= 1
@@ -263,45 +269,63 @@ object XlsxCodec {
     }.getOrElse(IndexedSeq.empty)
 
   /** full workbook: sheets in declaration order, rows densified */
-  def read(path: String): Seq[Sheet] = {
+  def read(path: String): Seq[Sheet] =
+    decode(path) { (sheets, rows) => sheets.indices.map(i => (sheets(i)._1, rows(i))) }
+
+  /** one sheet's rows, or None when the workbook declares no sheet of
+    * that name (on a duplicate name, the first declared). Only that
+    * sheet's part is decoded.
+    */
+  def readOne(path: String, name: String): Option[Seq[Seq[String]]] =
+    decode(path) { (sheets, rows) =>
+      val i = sheets.indexWhere(_._1 == name)
+      if (i < 0) None else Some(rows(i))
+    }
+
+  /** opens the zip and hands `body` the declared (name, relId) list and a
+    * decoder for the i-th declared sheet. The rels and the shared-string
+    * table are read on first need, so a part without `t="s"` cells never
+    * loads xl/sharedStrings.xml.
+    */
+  private def decode[A](path: String)(
+      body: (IndexedSeq[(String, String)], Int => Seq[Seq[String]]) => A): A = {
     val zf = new ZipFile(path)
     try {
-      val shared = readSharedStrings(zf)
-      val rels = readRels(zf)
-      readWorkbookSheets(zf).zipWithIndex.map { case ((name, rid), i) =>
-        val part = rels.getOrElse(rid, s"xl/worksheets/sheet${i + 1}.xml")
-        val rows = slurp(zf, part).map(readSheetPart(_, shared)).getOrElse(Seq.empty)
-        (name, rows)
-      }
+      val f = xmlFactory()
+      lazy val rels = readRels(f, zf)
+      lazy val shared = readSharedStrings(f, zf)
+      val sheets = readWorkbookSheets(f, zf)
+      body(sheets, i => {
+        val part = rels.getOrElse(sheets(i)._2, s"xl/worksheets/sheet${i + 1}.xml")
+        slurp(zf, part).map(readSheetPart(f, _, () => shared)).getOrElse(Seq.empty)
+      })
     } finally zf.close()
   }
 
-  private def readSheetPart(in: InputStream, shared: IndexedSeq[String]): Seq[Seq[String]] = {
-    val f = XMLInputFactory.newInstance()
-    f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-    f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
+  private def readSheetPart(f: XMLInputFactory, in: InputStream,
+      shared: () => IndexedSeq[String]): Seq[Seq[String]] = {
     val r = f.createXMLStreamReader(in)
     val rows = mutable.ArrayBuffer[Seq[String]]()
-    var row: mutable.ArrayBuffer[String] = null
+    val row = mutable.ArrayBuffer[String]() // the open row, copied out at </row>
     var cellCol = -1
     var cellType = "n"
     var inV = false
     var inIsT = false
     var inRPh = 0 // inline-string phonetic runs are not cell text
-    val text = new StringBuilder
+    val text = new java.lang.StringBuilder
     def endCell(): Unit = {
       if (cellCol >= 0) {
         while (row.size < cellCol) row += "" // densify skipped cells
         val raw = text.toString
         val v = cellType match {
           case "s" =>
-            raw.toIntOption.flatMap(shared.lift).getOrElse("")
+            raw.toIntOption.flatMap(shared().lift).getOrElse("")
           case "b" => if (raw == "1") "true" else "false"
           case _ => raw
         }
         if (row.size == cellCol) row += v else row(cellCol) = v
       }
-      cellCol = -1; cellType = "n"; text.clear()
+      cellCol = -1; cellType = "n"; text.setLength(0)
     }
     try {
       while (r.hasNext) {
@@ -309,25 +333,29 @@ object XlsxCodec {
           case XMLStreamConstants.START_ELEMENT =>
             r.getLocalName match {
               case "row" =>
-                row = mutable.ArrayBuffer[String]()
+                row.clear()
                 // sparse writers omit fully-empty rows — honor the r
                 // attribute so interior blank rows keep their position
                 // (cells densify by ref; rows must too, review-found)
-                (0 until r.getAttributeCount).foreach { i =>
+                var i = 0
+                while (i < r.getAttributeCount) {
                   if (r.getAttributeLocalName(i) == "r") {
                     r.getAttributeValue(i).toIntOption.foreach { rn =>
                       while (rows.size < rn - 1) rows += Seq.empty
                     }
                   }
+                  i += 1
                 }
               case "c" =>
-                cellType = "n"; cellCol = row.size; text.clear()
-                (0 until r.getAttributeCount).foreach { i =>
+                cellType = "n"; cellCol = row.size; text.setLength(0)
+                var i = 0
+                while (i < r.getAttributeCount) {
                   r.getAttributeLocalName(i) match {
                     case "r" => cellCol = colIndex(r.getAttributeValue(i))
                     case "t" => cellType = r.getAttributeValue(i)
                     case _ =>
                   }
+                  i += 1
                 }
               case "v" => inV = true
               case "rPh" | "phoneticPr" => inRPh += 1
@@ -335,16 +363,14 @@ object XlsxCodec {
               case _ =>
             }
           case XMLStreamConstants.CHARACTERS if inV || inIsT =>
-            text.append(r.getText)
+            text.append(r.getTextCharacters, r.getTextStart, r.getTextLength)
           case XMLStreamConstants.END_ELEMENT =>
             r.getLocalName match {
               case "v" => inV = false
               case "rPh" | "phoneticPr" => inRPh -= 1
               case "t" => inIsT = false
               case "c" => endCell()
-              case "row" =>
-                rows += row.toSeq
-                row = null
+              case "row" => rows += ArraySeq.unsafeWrapArray(row.toArray)
               case _ =>
             }
           case _ =>
@@ -352,9 +378,7 @@ object XlsxCodec {
       }
     } finally { r.close(); in.close() }
     // trim trailing fully-empty rows (Excel often persists them)
-    rows.reverseIterator.takeWhile(_.forall(_.isEmpty)).size match {
-      case 0 => rows.toSeq
-      case k => rows.dropRight(k).toSeq
-    }
+    rows.dropRightInPlace(rows.reverseIterator.takeWhile(_.forall(_.isEmpty)).size)
+    ArraySeq.unsafeWrapArray(rows.toArray)
   }
 }

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.lake._
+import graft.xlsx.XlsxCodec
 
 class CatalogSpec extends AnyFunSuite {
 
@@ -55,26 +56,69 @@ class CatalogSpec extends AnyFunSuite {
     assert(st.metadata.toMap.get("other").contains("True"))
   }
 
+  private val populated = CatalogState.empty.copy(
+    metadata = Vector("version" -> "0.1", "encrypted" -> "false"),
+    snapshots = Vector(SnapshotRow(0, "2025-01-01 00:00:00", 0, 5, 3),
+      SnapshotRow(1, "2025-01-01 00:00:01", 1, 8, 4)),
+    schemas = Vector(SchemaRow(1, "uuid-s", 0, None, "main")),
+    tables = Vector(TableRow(2, "uuid-t", 1, None, 1, "my_table"),
+      TableRow(3, "uuid-d", 1, Some(2), 1, "dropped")),
+    columns = Vector(
+      ColumnRow(4, 1, None, 2, 0, "id", "INTEGER", true),
+      ColumnRow(5, 1, None, 2, 1, "val", "VARCHAR", true)),
+    dataFiles = Vector(DataFileRow(1, 2, 1, None, "/d/f1.parquet", 4, 123),
+      DataFileRow(2, 2, 1, Some(2), "/d/f0.parquet", 2, 99)),
+    deleteFiles = Vector(DeleteFileRow(3, 2, 2, None, 2, "", 2)),
+    tableStats = Vector(TableStatsRow(2, 4)),
+    fileColumnStats = Vector(
+      FileColumnStatsRow(1, 2, 4, Some("1"), Some("4"), 0),
+      FileColumnStatsRow(1, 2, 5, None, None, 2)))
+
   test("toSheets . fromSheets == id on a populated state") {
-    val st = CatalogState.empty.copy(
-      metadata = Vector("version" -> "0.1", "encrypted" -> "false"),
-      snapshots = Vector(SnapshotRow(0, "2025-01-01 00:00:00", 0, 5, 3),
-        SnapshotRow(1, "2025-01-01 00:00:01", 1, 8, 4)),
-      schemas = Vector(SchemaRow(1, "uuid-s", 0, None, "main")),
-      tables = Vector(TableRow(2, "uuid-t", 1, None, 1, "my_table"),
-        TableRow(3, "uuid-d", 1, Some(2), 1, "dropped")),
-      columns = Vector(
-        ColumnRow(4, 1, None, 2, 0, "id", "INTEGER", true),
-        ColumnRow(5, 1, None, 2, 1, "val", "VARCHAR", true)),
-      dataFiles = Vector(DataFileRow(1, 2, 1, None, "/d/f1.parquet", 4, 123),
-        DataFileRow(2, 2, 1, Some(2), "/d/f0.parquet", 2, 99)),
-      deleteFiles = Vector(DeleteFileRow(3, 2, 2, None, 2, "", 2)),
-      tableStats = Vector(TableStatsRow(2, 4)),
-      fileColumnStats = Vector(
-        FileColumnStatsRow(1, 2, 4, Some("1"), Some("4"), 0),
-        FileColumnStatsRow(1, 2, 5, None, None, 2)))
-    val rt = CatalogState.fromSheets(st.toSheets)
-    assert(rt == st)
+    assert(CatalogState.fromSheets(populated.toSheets) == populated)
+  }
+
+  test("fromSheets finds columns by header, in any order") {
+    val reversed = populated.toSheets.map { s =>
+      val w = s.rows.map(_.length).max
+      s.copy(rows = s.rows.map(_.padTo(w, "").reverse))
+    }
+    assert(CatalogState.fromSheets(reversed) == populated)
+  }
+
+  test("fromSheets: a duplicate header resolves to its last column") {
+    val sheets = populated.toSheets.map {
+      case s if s.name == "data_file" =>
+        s.copy(rows = (s.rows.head :+ "path") +: s.rows.tail.map(r => r :+ s"${r(4)}.moved"))
+      case s => s
+    }
+    val st = CatalogState.fromSheets(sheets)
+    assert(st.dataFiles == populated.dataFiles.map(f => f.copy(path = f.path + ".moved")))
+  }
+
+  test("fromSheets: short rows read blank, absent optional columns fall back, " +
+      "blank rows are skipped, an absent required column throws") {
+    val st = CatalogState.fromSheets(Seq(
+      XlsxSheet("snapshot", Seq(
+        Seq("snapshot_id", "snapshot_time", "schema_version", "next_catalog_id", "next_file_id"),
+        Seq("3"), Seq("", ""))),
+      XlsxSheet("table", Seq(Seq("table_name", "table_id", "begin_snapshot"), Seq("t", "2", "1"))),
+      XlsxSheet("data_file", Seq(
+        Seq("data_file_id", "table_id", "begin_snapshot", "path", "end_snapshot", "record_count"),
+        Seq("1", "2", "1", "/p")))))
+    assert(st.snapshots == Vector(SnapshotRow(3, "", 0, 1, 1)))
+    assert(st.tables == Vector(TableRow(2, "", 1, None, 0, "t")))
+    assert(st.dataFiles == Vector(DataFileRow(1, 2, 1, None, "/p", 0, 0)))
+    val e = intercept[NoSuchElementException](CatalogState.fromSheets(Seq(
+      XlsxSheet("table", Seq(Seq("table_id", "begin_snapshot"), Seq("2", "1"))))))
+    assert(e.getMessage == "key not found: table_name")
+  }
+
+  test("fromSheets . toSheets == id on the Excel-authored fixture's catalog") {
+    val st = CatalogState.fromSheets(XlsxCodec.read("fixtures/excel_authored_lake.xlsx")
+      .map { case (n, rows) => XlsxSheet(n, rows) })
+    assert(st.tables.nonEmpty && st.inlinedData.nonEmpty)
+    assert(CatalogState.fromSheets(st.toSheets) == st)
   }
 
   test("column defaults live IN the ducklake_column sheet (DuckLake v0.1)") {

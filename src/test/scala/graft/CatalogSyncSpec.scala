@@ -1,5 +1,6 @@
 package graft
 
+import scala.collection.immutable.ArraySeq
 import scala.collection.mutable.ArrayBuffer
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -64,6 +65,83 @@ class CatalogSyncSpec extends AnyFunSuite {
     assert(digest(Seq(Seq("", "a"))) != digest(Seq(Seq("a"))))
   }
 
+  /** the digest's reference spelling: md5 over length-prefixed UTF-8 cells
+    * and a -1 row terminator, trailing blank cells dropped
+    */
+  private def md5OfUtf8(rows: Seq[Seq[String]]): String = {
+    val d = java.security.MessageDigest.getInstance("MD5")
+    def int(v: Int): Unit = d.update(java.nio.ByteBuffer.allocate(4).putInt(v).array())
+    rows.foreach { r =>
+      r.reverse.dropWhile(_.isEmpty).reverse.foreach { c =>
+        val bytes = c.getBytes("UTF-8")
+        int(bytes.length); d.update(bytes)
+      }
+      int(-1)
+    }
+    java.util.Base64.getEncoder.encodeToString(d.digest())
+  }
+
+  test("digest is md5 over length-prefixed UTF-8 cells, whatever the Seq") {
+    import CatalogSync.digest
+    val rows = Seq(
+      Seq("id", "ascii", "", "latin é", "cjk 東京", "astral \uD83D\uDE00 x", "", ""),
+      Seq(), Seq(""), Seq("", "a"),
+      Seq("x" * 1000, "ü" * 300, "\uD83D\uDE00" * 200)) // past the 256-byte buffer
+    assert(digest(rows) == md5OfUtf8(rows))
+    assert(digest(rows.map(_.toList).toList) == digest(rows))
+    assert(digest(ArraySeq.from(rows.map(r => ArraySeq.from(r)))) == digest(rows))
+    assert(digest(rows.map(_.toVector).toVector) == digest(rows))
+  }
+
+  test("digest keeps non-BMP text and lone surrogates apart") {
+    import CatalogSync.digest
+    val smile = "\uD83D\uDE00"
+    assert(digest(Seq(Seq(smile))) != digest(Seq(Seq("\uD83D\uDE01"))))
+    assert(digest(Seq(Seq(smile))) != digest(Seq(Seq("\uD83D", "\uDE00"))))
+    assert(digest(Seq(Seq("\uD83D"))) != digest(Seq(Seq("?"))))
+    assert(digest(Seq(Seq("\uD83D"))) != digest(Seq(Seq("\uDE00"))))
+  }
+
+  test("pushing the pulled state makes one readSheet and writes nothing") {
+    val (remote, sync) = bootstrapped()
+    // a spelling the catalog normalizes on pull ('encrypted' lower-cases),
+    // so re-encoding the pulled state would dirty the metadata sheet
+    remote.book = remote.book.map(_.map {
+      case (n, rows) if n == CatalogSchema.sheetName("ducklake_metadata") =>
+        n -> (rows :+ Seq("encrypted", "False"))
+      case s => s
+    })
+    val st = sync.pull()
+    remote.calls.clear()
+    sync.push(st)
+    assert(remote.calls.toSeq == Seq("readSheet"))
+    assert(remote.writes.isEmpty)
+    // an equal state that is another object takes the digest path, and
+    // there the normalized spelling is a change
+    sync.push(st.copy())
+    assert(remote.writes.toSeq == Seq(Set(CatalogSchema.sheetName("ducklake_metadata"))))
+  }
+
+  test("a state equal by value but another object writes nothing") {
+    val (remote, sync) = bootstrapped()
+    val st = sync.pull()
+    val twin = st.copy()
+    assert(twin == st && (twin ne st))
+    sync.push(twin)
+    assert(remote.writes.isEmpty, remote.writes)
+    assert(remote.count("readSheet") == 1, remote.calls)
+  }
+
+  test("after the workbook vanishes, pushing the last pulled state re-creates it whole") {
+    val (remote, sync) = bootstrapped()
+    val st = sync.pull()
+    remote.book = None
+    assert(sync.pullIfPresent().isEmpty)
+    sync.push(st)
+    assert(remote.writes.toSeq == Seq(st.toSheets.map(_.name).toSet))
+    assert(sync.pull() == st)
+  }
+
   test("bootstrap on an absent workbook seeds it without a CAS probe") {
     val remote = new MemRemote
     val st = new CatalogSync(remote).bootstrap(seed)
@@ -105,6 +183,8 @@ class CatalogSyncSpec extends AnyFunSuite {
       b.push(base.copy(metadata = base.metadata :+ ("owner" -> "b")))
     }
     assert(e.getMessage.contains("stale push rejected"))
+    // so is the unchanged pulled state, which a read-only statement pushes
+    intercept[java.util.ConcurrentModificationException](b.push(base))
     assert(remote.writes.isEmpty)
     // a fresh pull re-bases the loser, and its commit then lands
     b.push(b.pull().copy(metadata = base.metadata :+ ("owner" -> "b")))

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
-import graft.xlsx.XlsxCodec
+import graft.xlsx.{LocalXlsxRemote, XlsxCodec}
 
 class XlsxCodecSpec extends AnyFunSuite {
 
@@ -157,6 +157,47 @@ class XlsxCodecSpec extends AnyFunSuite {
       Seq("key", "value"),          // shared strings incl. multi-run <r>
       Seq("true", "42.5"),          // native bool + styled number
       Seq("false", "inline text"))) // bool false + inline string
+  }
+
+  test("readOne decodes the same rows as read, sheet by sheet; None for an unknown name") {
+    val p = tmpXlsx()
+    XlsxCodec.write(p, Seq("snapshot", "schema", "table").map(n =>
+      (n, Seq(Seq("k", "v"), Seq(n, ""), Seq("", n)))))
+    // the Excel-authored fixture: shared strings, rich and phonetic runs,
+    // sheet parts resolved through workbook.xml.rels
+    val fixture = "fixtures/excel_authored_lake.xlsx"
+    for (path <- Seq(p, fixture)) {
+      val all = XlsxCodec.read(path)
+      assert(all.nonEmpty)
+      all.foreach { case (n, rows) =>
+        assert(XlsxCodec.readOne(path, n).contains(rows), s"$path: sheet $n")
+      }
+      assert(XlsxCodec.readOne(path, "no_such_sheet").isEmpty)
+    }
+  }
+
+  test("readOne loads xl/sharedStrings.xml only for a part with t=\"s\" cells") {
+    val p = tmpXlsx()
+    val zip = new java.util.zip.ZipOutputStream(Files.newOutputStream(java.nio.file.Paths.get(p)))
+    def part(n: String, body: String): Unit = {
+      zip.putNextEntry(new java.util.zip.ZipEntry(n))
+      zip.write(body.getBytes("UTF-8")); zip.closeEntry()
+    }
+    part("xl/workbook.xml",
+      """<?xml version="1.0"?><workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships"><sheets><sheet name="inline" sheetId="1" r:id="rId1"/><sheet name="shared" sheetId="2" r:id="rId2"/></sheets></workbook>""")
+    part("xl/worksheets/sheet1.xml",
+      """<?xml version="1.0"?><worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData><row r="1"><c r="A1" t="inlineStr"><is><t>a</t></is></c><c r="B1"><v>7</v></c></row></sheetData></worksheet>""")
+    part("xl/worksheets/sheet2.xml",
+      """<?xml version="1.0"?><worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData><row r="1"><c r="A1" t="s"><v>0</v></c></row></sheetData></worksheet>""")
+    part("xl/sharedStrings.xml", "<sst><si><t>unterminated") // not well-formed
+    zip.close()
+    assert(XlsxCodec.readOne(p, "inline").contains(Seq(Seq("a", "7"))))
+    assertThrows[javax.xml.stream.XMLStreamException](XlsxCodec.readOne(p, "shared"))
+  }
+
+  test("LocalXlsxRemote.readSheet is None when the workbook file is absent") {
+    val dir = Files.createTempDirectory("codec_gone")
+    assert(new LocalXlsxRemote(dir.resolve("gone.xlsx").toString).readSheet("snapshot").isEmpty)
   }
 
   test("rejects >31-char sheet names (Excel cap, ducklakexl.py:241)") {

@@ -37,6 +37,34 @@ class XlsxForeignSpec extends AnyFunSuite {
     assert(all.contains("true") && all.contains("false"))
   }
 
+  test("a read-only statement leaves the workbook byte-identical, also where " +
+      "re-encoding its pull would change a cell") {
+    // the pulled state is pushed back as the same object, so nothing is
+    // re-encoded: the first real write is what rewrites the file in the
+    // codec's form
+    val dir = Files.createTempDirectory("graft_foreign_ro")
+    val asSaved = dir.resolve("saved.xlsx")
+    Files.copy(Paths.get(fixture), asSaved)
+    // Excel's native-bool spelling of 'encrypted', which the pull
+    // lower-cases
+    val respelled = dir.resolve("respelled.xlsx")
+    XlsxCodec.write(respelled.toString, XlsxCodec.read(fixture).map {
+      case ("metadata", rows) => "metadata" -> rows.map {
+        case Seq("encrypted", v) => Seq("encrypted", v.capitalize)
+        case r => r
+      }
+      case s => s
+    })
+    assert(XlsxCodec.readOne(respelled.toString, "metadata").get.contains(Seq("encrypted", "False")))
+    for (xlsx <- Seq(asSaved, respelled)) {
+      val before = Files.readAllBytes(xlsx)
+      val lake = new DuckLakeXLSpark(spark, xlsx.toString, dir.resolve("data").toString)
+      assert(lake.sql("SELECT count(*) AS c FROM crew").head().getLong(0) == 4L)
+      assert(java.util.Arrays.equals(Files.readAllBytes(xlsx), before),
+        s"a SELECT rewrote ${xlsx.getFileName}")
+    }
+  }
+
   test("a lake OPENS from the Excel-authored workbook alone and answers " +
       "queries (pull on a foreign file)") {
     val dir = Files.createTempDirectory("graft_foreign").toString

@@ -2528,7 +2528,7 @@ class DuckLakeXLSpark(
         StructField(f.name, StringType, nullable = true)))
       val rows = live.map(r => Row.fromSeq(
         schema.fields.indices.map(i =>
-          CatalogState.optCell(r.cells.applyOrElse(i, (_: Int) => "")).orNull)))
+          CatalogState.optValue(r.cells.applyOrElse(i, (_: Int) => "")).orNull)))
       val df = spark.createDataFrame(rows.asJava, strSchema)
       Some(df.select(schema.fields.map(f =>
         colq(df, f.name).cast(f.dataType).as(f.name)).toSeq: _*))

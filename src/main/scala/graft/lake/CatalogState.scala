@@ -761,8 +761,18 @@ object CatalogState {
   /** empty cell -> NULL (ducklakexl.py:497) */
   def optCell(s: String): Option[String] = {
     val t = s.trim
-    if (t.isEmpty || t == "<NA>" || t == "nan" || t == "None" || t == "NaT") None else Some(t)
+    if (isNullCell(t)) None else Some(t)
   }
+
+  private def isNullCell(t: String): Boolean =
+    t.isEmpty || t == "<NA>" || t == "nan" || t == "None" || t == "NaT"
+
+  /** a data-value cell (min/max stat, partition value, inlined row cell):
+    * NULL as for [[optCell]], but the value kept as written. Trimming
+    * changes the value ("z " to "z", "a" + U+0001 to "a"), and pruning on
+    * a moved bound skips files that hold matching rows.
+    */
+  def optValue(s: String): Option[String] = if (isNullCell(s.trim)) None else Some(s)
 
   def asLong(s: String): Long = {
     val t = s.trim
@@ -913,7 +923,7 @@ object CatalogState {
       filePartitionValues = rowsOf("ducklake_file_partition_value").map(m => FilePartitionValueRow(
         asLong(m("data_file_id")), asLong(m("table_id")),
         ol(m.getOrElse("partition_key_index", "")).getOrElse(0L).toInt,
-        optCell(m.getOrElse("partition_value", "")))).toVector,
+        optValue(m.getOrElse("partition_value", "")))).toVector,
       dataFiles = rowsOf("ducklake_data_file").map(m => DataFileRow(
         asLong(m("data_file_id")), asLong(m("table_id")), asLong(m("begin_snapshot")),
         ol(m.getOrElse("end_snapshot", "")), m("path"),
@@ -948,7 +958,7 @@ object CatalogState {
       columnTags = parsedColumnTags ++ synthesizedTags,
       fileColumnStats = rowsOf("ducklake_file_column_statistics").map(m => FileColumnStatsRow(
         asLong(m("data_file_id")), asLong(m("table_id")), asLong(m("column_id")),
-        optCell(m.getOrElse("min_value", "")), optCell(m.getOrElse("max_value", "")),
+        optValue(m.getOrElse("min_value", "")), optValue(m.getOrElse("max_value", "")),
         ol(m.getOrElse("null_count", "")).getOrElse(0L))).toVector,
       extraSheets = sheets.filterNot(s =>
         CatalogSchema.knownSheetNames.contains(s.name) ||

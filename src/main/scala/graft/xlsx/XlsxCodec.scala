@@ -1,13 +1,15 @@
 package graft.xlsx
 
-import java.io.{ByteArrayOutputStream, InputStream}
+import java.io.{BufferedOutputStream, IOException, InputStream, OutputStream}
+import java.nio.channels.{Channels, FileChannel}
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import java.util.zip.{ZipEntry, ZipFile, ZipOutputStream}
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
 
 import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
+import scala.util.Using
 
 /** Pure-JDK xlsx codec (java.util.zip + StAX) — no Apache POI available in
   * the offline build (SURVEY.md §7.0). An .xlsx is a zip of SpreadsheetML
@@ -24,8 +26,21 @@ import scala.collection.mutable
   * the catalog schema — same contract as the reference, ducklakexl.py:568),
   * with proper base-26 column names (AA, AB, …) past column 26 — fixing
   * the reference's `string.ascii_uppercase[ncols-1]` 26-column cap
-  * (ducklakexl.py:570). Writes are atomic: temp file + ATOMIC_MOVE, which
-  * gives the local remote a free improvement over the reference's
+  * (ducklakexl.py:570). It streams: each sheet's rows are encoded as UTF-8
+  * into one reused buffer that feeds the zip entry in the temp file, so a
+  * write holds no sheet String and no in-memory zip.
+  *
+  * Cell text and sheet names round-trip losslessly. A UTF-16 unit that XML
+  * 1.0 cannot hold (controls other than tab/LF/CR, U+FFFE/U+FFFF, lone
+  * surrogates) is written as the OOXML escape `_xHHHH_` (ECMA-376
+  * ST_Xstring), and a literal `_` that starts such a pattern as `_x005F_`;
+  * the read side decodes both in `<t>` text (inline and shared strings)
+  * and in sheet names. CR is written `&#13;` so end-of-line normalization
+  * keeps it.
+  *
+  * Writes are atomic and durable: temp file in the target's directory,
+  * forced to disk, then ATOMIC_MOVE and a best-effort directory sync —
+  * a free improvement for the local remote over the reference's
   * non-atomic full rewrite (README.md:28 caveats).
   */
 object XlsxCodec {
@@ -56,42 +71,206 @@ object XlsxCodec {
   }
 
   // ----------------------------------------------------------------- write
-  private def xmlEscape(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    s.foreach {
-      case '&' => sb.append("&amp;")
-      case '<' => sb.append("&lt;")
-      case '>' => sb.append("&gt;")
-      case '"' => sb.append("&quot;")
-      // a raw CR would be eaten by XML 1.0 end-of-line normalization on
-      // the next read (CR/CRLF -> LF), breaking read(write(x)) == x for
-      // any cell holding Windows line endings — the character reference
-      // survives normalization (review-found)
-      case '\r' => sb.append("&#13;")
-      case c if c < ' ' && c != '\t' && c != '\n' =>
-        () // control chars are not legal in XML 1.0; drop
-      case c => sb.append(c)
+  private def ascii(s: String): Array[Byte] = s.getBytes(StandardCharsets.US_ASCII)
+
+  private val XmlDecl = ascii("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""")
+  private val SheetOpen = ascii(
+    """<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""")
+  private val SheetClose = ascii("</sheetData></worksheet>")
+  private val RowOpen = ascii("<row r=\"")
+  private val TagClose = ascii("\">")
+  private val RowClose = ascii("</row>")
+  private val CellOpen = ascii("<c r=\"")
+  private val CellText = ascii("\" t=\"inlineStr\"><is><t xml:space=\"preserve\">")
+  private val CellClose = ascii("</t></is></c>")
+  private val Amp = ascii("&amp;")
+  private val Lt = ascii("&lt;")
+  private val Gt = ascii("&gt;")
+  private val Quot = ascii("&quot;")
+  // a raw CR would be eaten by XML 1.0 end-of-line normalization on the
+  // next read (CR/CRLF -> LF); the character reference survives it
+  private val Cr = ascii("&#13;")
+  private val Hex = ascii("0123456789ABCDEF")
+
+  private def isHex(c: Char): Boolean =
+    (c >= '0' && c <= '9') || (c >= 'A' && c <= 'F') || (c >= 'a' && c <= 'f')
+
+  /** `s` holds `_xHHHH_` at `i` (ECMA-376 ST_Xstring escape) */
+  private def xEscapeAt(s: String, i: Int): Boolean =
+    i + 6 < s.length && s.charAt(i) == '_' && s.charAt(i + 1) == 'x' &&
+      isHex(s.charAt(i + 2)) && isHex(s.charAt(i + 3)) && isHex(s.charAt(i + 4)) &&
+      isHex(s.charAt(i + 5)) && s.charAt(i + 6) == '_'
+
+  /** UTF-8 XML written into one reused buffer that is handed to `out`
+    * each time it fills: no per-cell String, no whole-part copy
+    */
+  private final class XmlSink(out: OutputStream) {
+    private val buf = new Array[Byte](1 << 16)
+    private var n = 0
+    private var refs = new Array[Array[Byte]](32) // column letters by index
+
+    def flush(): Unit = { out.write(buf, 0, n); n = 0 }
+
+    def bytes(b: Array[Byte]): Unit = {
+      if (n + b.length > buf.length) flush()
+      if (b.length > buf.length) out.write(b)
+      else { System.arraycopy(b, 0, buf, n, b.length); n += b.length }
     }
-    sb.toString
+
+    /** markup spelled in this file: ASCII, nothing to escape */
+    def markup(s: String): Unit = bytes(ascii(s))
+
+    def int(v: Int): Unit = {
+      if (n + 11 > buf.length) flush()
+      var d = 1
+      while (v / d >= 10) d *= 10
+      while (d > 0) { buf(n) = ('0' + v / d % 10).toByte; n += 1; d /= 10 }
+    }
+
+    def colRef(c: Int): Array[Byte] = {
+      if (c >= refs.length) refs = java.util.Arrays.copyOf(refs, math.max(refs.length * 2, c + 1))
+      if (refs(c) == null) refs(c) = ascii(colName(c))
+      refs(c)
+    }
+
+    private def put(b: Int): Unit = { buf(n) = b.toByte; n += 1 }
+
+    /** `_xHHHH_`: the OOXML spelling of a UTF-16 unit XML 1.0 cannot hold */
+    private def xEscape(c: Int): Unit = {
+      put('_'); put('x')
+      put(Hex(c >> 12 & 0xF)); put(Hex(c >> 8 & 0xF)); put(Hex(c >> 4 & 0xF)); put(Hex(c & 0xF))
+      put('_')
+    }
+
+    /** escaped text: `& < > "` as entities, CR as `&#13;`, every other
+      * XML-illegal unit (controls, U+FFFE/U+FFFF, lone surrogates) as
+      * `_xHHHH_`, and a literal `_` that starts such a pattern as `_x005F_`
+      */
+    def text(s: String): Unit = {
+      val len = s.length
+      var i = 0
+      while (i < len) {
+        if (n + 7 > buf.length) flush() // the longest spelling of one unit
+        val c = s.charAt(i)
+        if (c < 0x80) {
+          c match {
+            case '&' => bytes(Amp)
+            case '<' => bytes(Lt)
+            case '>' => bytes(Gt)
+            case '"' => bytes(Quot)
+            case '\r' => bytes(Cr)
+            case '\t' | '\n' => put(c)
+            case '_' => if (xEscapeAt(s, i)) xEscape('_') else put(c)
+            case _ => if (c < ' ') xEscape(c) else put(c)
+          }
+        } else if (c < 0x800) {
+          put(0xC0 | c >> 6); put(0x80 | c & 0x3F)
+        } else if (Character.isHighSurrogate(c) && i + 1 < len &&
+            Character.isLowSurrogate(s.charAt(i + 1))) {
+          val cp = Character.toCodePoint(c, s.charAt(i + 1))
+          put(0xF0 | cp >> 18); put(0x80 | cp >> 12 & 0x3F)
+          put(0x80 | cp >> 6 & 0x3F); put(0x80 | cp & 0x3F)
+          i += 1
+        } else if (Character.isSurrogate(c) || c >= 0xFFFE) {
+          xEscape(c)
+        } else {
+          put(0xE0 | c >> 12); put(0x80 | c >> 6 & 0x3F); put(0x80 | c & 0x3F)
+        }
+        i += 1
+      }
+    }
   }
 
-  private def sheetXml(rows: Seq[Seq[String]]): String = {
-    val sb = new StringBuilder
-    sb.append("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""")
-    sb.append("""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""")
-    rows.zipWithIndex.foreach { case (row, r) =>
-      sb.append(s"""<row r="${r + 1}">""")
-      row.zipWithIndex.foreach { case (cell, c) =>
-        if (cell != null && cell.nonEmpty) {
-          sb.append(s"""<c r="${colName(c)}${r + 1}" t="inlineStr"><is><t xml:space="preserve">""")
-          sb.append(xmlEscape(cell))
-          sb.append("</t></is></c>")
-        }
+  /** inverse of the writer's `_xHHHH_` escaping (ST_Xstring): `s` itself
+    * when it holds no escape, so plain text costs no copy
+    */
+  private def unescape(s: String): String = {
+    var i = s.indexOf("_x")
+    while (i >= 0 && !xEscapeAt(s, i)) i = s.indexOf("_x", i + 1)
+    if (i < 0) s
+    else {
+      val sb = new java.lang.StringBuilder(s.length)
+      sb.append(s, 0, i)
+      while (i < s.length) {
+        if (xEscapeAt(s, i)) {
+          sb.append(Integer.parseInt(s, i + 2, i + 6, 16).toChar); i += 7
+        } else { sb.append(s.charAt(i)); i += 1 }
       }
-      sb.append("</row>")
+      sb.toString
     }
-    sb.append("</sheetData></worksheet>")
-    sb.toString
+  }
+
+  private def sheetPart(x: XmlSink, rows: Seq[Seq[String]]): Unit = {
+    x.bytes(XmlDecl); x.bytes(SheetOpen)
+    var r = 0
+    val it = rows.iterator
+    while (it.hasNext) {
+      val cells = it.next().iterator
+      r += 1
+      x.bytes(RowOpen); x.int(r); x.bytes(TagClose)
+      var c = 0
+      while (cells.hasNext) {
+        val cell = cells.next()
+        if (cell != null && !cell.isEmpty) {
+          x.bytes(CellOpen); x.bytes(x.colRef(c)); x.int(r); x.bytes(CellText)
+          x.text(cell)
+          x.bytes(CellClose)
+        }
+        c += 1
+      }
+      x.bytes(RowClose)
+    }
+    x.bytes(SheetClose)
+  }
+
+  /** the package parts, then each sheet's XML encoded straight into its
+    * zip entry
+    */
+  private def encode(zip: ZipOutputStream, sheets: Seq[Sheet]): Unit = {
+    val x = new XmlSink(zip)
+    def part(name: String)(body: => Unit): Unit = {
+      zip.putNextEntry(new ZipEntry(name))
+      body
+      x.flush()
+      zip.closeEntry()
+    }
+    val n = sheets.size
+    part("[Content_Types].xml") {
+      x.bytes(XmlDecl)
+      x.markup("""<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">""" +
+        """<Default Extension="rels" ContentType="application/vnd.openxmlformats-package.relationships+xml"/>""" +
+        """<Default Extension="xml" ContentType="application/xml"/>""" +
+        """<Override PartName="/xl/workbook.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.sheet.main+xml"/>""")
+      (1 to n).foreach(i => x.markup(
+        s"""<Override PartName="/xl/worksheets/sheet$i.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml"/>"""))
+      x.markup("</Types>")
+    }
+    part("_rels/.rels") {
+      x.bytes(XmlDecl)
+      x.markup("""<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">""" +
+        """<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/officeDocument" Target="xl/workbook.xml"/>""" +
+        """</Relationships>""")
+    }
+    part("xl/workbook.xml") {
+      x.bytes(XmlDecl)
+      x.markup("""<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships"><sheets>""")
+      sheets.zipWithIndex.foreach { case ((name, _), i) =>
+        x.markup("""<sheet name="""")
+        x.text(name)
+        x.markup(s"""" sheetId="${i + 1}" r:id="rId${i + 1}"/>""")
+      }
+      x.markup("</sheets></workbook>")
+    }
+    part("xl/_rels/workbook.xml.rels") {
+      x.bytes(XmlDecl)
+      x.markup("""<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">""")
+      (1 to n).foreach(i => x.markup(
+        s"""<Relationship Id="rId$i" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet$i.xml"/>"""))
+      x.markup("</Relationships>")
+    }
+    sheets.zipWithIndex.foreach { case ((_, rows), i) =>
+      part(s"xl/worksheets/sheet${i + 1}.xml")(sheetPart(x, rows))
+    }
   }
 
   def write(path: String, sheets: Seq[Sheet]): Unit = {
@@ -99,49 +278,10 @@ object XlsxCodec {
     sheets.foreach { case (n, _) =>
       require(n.length <= 31, s"sheet name >31 chars: $n") // Excel cap
     }
-    val bos = new ByteArrayOutputStream()
-    val zip = new ZipOutputStream(bos, StandardCharsets.UTF_8)
-    def part(name: String, content: String): Unit = {
-      zip.putNextEntry(new ZipEntry(name))
-      zip.write(content.getBytes(StandardCharsets.UTF_8))
-      zip.closeEntry()
-    }
-    val n = sheets.size
-    part("[Content_Types].xml",
-      """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
-      """<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">""" +
-      """<Default Extension="rels" ContentType="application/vnd.openxmlformats-package.relationships+xml"/>""" +
-      """<Default Extension="xml" ContentType="application/xml"/>""" +
-      """<Override PartName="/xl/workbook.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.sheet.main+xml"/>""" +
-      (1 to n).map(i =>
-        s"""<Override PartName="/xl/worksheets/sheet$i.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml"/>""")
-        .mkString + "</Types>")
-    part("_rels/.rels",
-      """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
-      """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">""" +
-      """<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/officeDocument" Target="xl/workbook.xml"/>""" +
-      """</Relationships>""")
-    part("xl/workbook.xml",
-      """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
-      """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships"><sheets>""" +
-      sheets.zipWithIndex.map { case ((name, _), i) =>
-        s"""<sheet name="${xmlEscape(name)}" sheetId="${i + 1}" r:id="rId${i + 1}"/>"""
-      }.mkString + "</sheets></workbook>")
-    part("xl/_rels/workbook.xml.rels",
-      """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
-      """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">""" +
-      (1 to n).map(i =>
-        s"""<Relationship Id="rId$i" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet$i.xml"/>""")
-        .mkString + "</Relationships>")
-    sheets.zipWithIndex.foreach { case ((_, rows), i) =>
-      part(s"xl/worksheets/sheet${i + 1}.xml", sheetXml(rows))
-    }
-    zip.close()
     val target = Paths.get(path)
-    if (target.getParent != null) Files.createDirectories(target.getParent)
-    val tmp = Files.createTempFile(
-      if (target.getParent != null) target.getParent else Paths.get("."),
-      ".xlsx-", ".tmp")
+    val dir = if (target.getParent != null) target.getParent else Paths.get(".")
+    Files.createDirectories(dir)
+    val tmp = Files.createTempFile(dir, ".xlsx-", ".tmp")
     try {
       // createTempFile's 0600 mode would otherwise survive the atomic
       // move and lock other accounts out of a shared lake workbook —
@@ -153,12 +293,32 @@ object XlsxCodec {
           if (Files.exists(target)) Files.getPosixFilePermissions(target)
           else PosixFilePermissions.fromString("rw-r--r--")
         Files.setPosixFilePermissions(tmp, perms)
-      } catch { case _: UnsupportedOperationException | _: java.io.IOException => () }
-      Files.write(tmp, bos.toByteArray)
+      } catch { case _: UnsupportedOperationException | _: IOException => () }
+      val ch = FileChannel.open(tmp, StandardOpenOption.WRITE)
+      Using.resource(new ZipOutputStream(
+          new BufferedOutputStream(Channels.newOutputStream(ch), 1 << 16),
+          StandardCharsets.UTF_8)) { zip =>
+        encode(zip, sheets)
+        zip.finish()
+        zip.flush()
+        // the bytes reach the disk before the rename publishes them, so a
+        // crash cannot leave an empty workbook under the lake's name
+        ch.force(true)
+      }
       Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
         StandardCopyOption.ATOMIC_MOVE)
+      syncDir(dir)
     } finally Files.deleteIfExists(tmp) // no-op after a successful move
   }
+
+  /** makes a rename in `dir` durable; best effort, since not every
+    * platform can open a directory for sync
+    */
+  private def syncDir(dir: Path): Unit =
+    try {
+      val ch = FileChannel.open(dir, StandardOpenOption.READ)
+      try ch.force(true) finally ch.close()
+    } catch { case _: IOException | _: UnsupportedOperationException => () }
 
   // ------------------------------------------------------------------ read
   private def slurp(zf: ZipFile, name: String): Option[InputStream] =
@@ -196,7 +356,7 @@ object XlsxCodec {
           var i = 0
           while (i < r.getAttributeCount) {
             r.getAttributeLocalName(i) match {
-              case "name" => name = r.getAttributeValue(i)
+              case "name" => name = unescape(r.getAttributeValue(i))
               case "id"   => rid = r.getAttributeValue(i)
               case _      =>
             }
@@ -258,7 +418,7 @@ object XlsxCodec {
               r.getLocalName match {
                 case "rPh" | "phoneticPr" => inRPh -= 1
                 case "t" => inT = false
-                case "si" => inSi = false; out += cur.toString
+                case "si" => inSi = false; out += unescape(cur.toString)
                 case _ =>
               }
             case _ =>
@@ -321,6 +481,7 @@ object XlsxCodec {
           case "s" =>
             raw.toIntOption.flatMap(shared().lift).getOrElse("")
           case "b" => if (raw == "1") "true" else "false"
+          case "inlineStr" => unescape(raw)
           case _ => raw
         }
         if (row.size == cellCol) row += v else row(cellCol) = v

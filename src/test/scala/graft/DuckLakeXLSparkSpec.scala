@@ -515,4 +515,37 @@ class DuckLakeXLSparkSpec extends AnyFunSuite {
     lake.sql("DELETE FROM jt USING js WHERE jt.id = js.id")
     assert(lake.sql("SELECT id FROM jt").collect().map(_.getInt(0)).toSeq == Seq(2))
   }
+
+  test("a U+FFFF value does not brick the lake: its min/max stat round-trips the workbook") {
+    val (lake, xlsx, data) = freshLake()
+    lake.sql("CREATE TABLE t(v VARCHAR)")
+    lake.sql("INSERT INTO t VALUES ('zz\uffff')")
+    assert(lake.sql("SELECT v FROM t").collect().map(_.getString(0)).toSeq == Seq("zz\uffff"))
+    val reopened = new DuckLakeXLSpark(spark, xlsx, data)
+    assert(reopened.sql("SELECT count(*) FROM t WHERE v = 'zz\uffff'").collect().head.getLong(0) == 1L)
+  }
+
+  test("control characters and edge spaces keep their min/max stat, so an equality filter still finds the row") {
+    val (lake, _, _) = freshLake()
+    lake.sql("CREATE TABLE t(v VARCHAR)")
+    lake.sql("INSERT INTO t VALUES ('a\u0001')")
+    lake.sql("INSERT INTO t VALUES ('z ')")
+    def count(where: String) = lake.sql(s"SELECT count(*) FROM t$where").collect().head.getLong(0)
+    assert(count("") == 2L)
+    assert(count(" WHERE v = 'a\u0001'") == 1L)
+    assert(count(" WHERE v = 'z '") == 1L)
+  }
+
+  test("inlined rows and partition values keep edge spaces and control characters") {
+    val dir = Files.createTempDirectory("lake").toString
+    val inlined = new DuckLakeXLSpark(spark, s"$dir/lake.xlsx", s"$dir/data", inlineRowLimit = 10)
+    inlined.sql("CREATE TABLE t(v VARCHAR)")
+    inlined.sql("INSERT INTO t VALUES (' a '), ('b\u0001')")
+    assert(inlined.sql("SELECT v FROM t ORDER BY v").collect().map(_.getString(0)).toSeq ==
+      Seq(" a ", "b\u0001"))
+    val (lake, _, _) = freshLake()
+    lake.sql("CREATE TABLE p(k VARCHAR, x INTEGER); ALTER TABLE p SET PARTITIONED BY (k)")
+    lake.sql("INSERT INTO p VALUES (' a', 1), ('b', 2)")
+    assert(lake.sql("SELECT x FROM p WHERE k = ' a'").collect().map(_.getInt(0)).toSeq == Seq(1))
+  }
 }

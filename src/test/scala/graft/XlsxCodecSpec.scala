@@ -1,6 +1,10 @@
 package graft
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.Files
+import java.util.zip.ZipFile
+
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
@@ -11,6 +15,49 @@ class XlsxCodecSpec extends AnyFunSuite {
 
   private def tmpXlsx(): String =
     Files.createTempFile("codec", ".xlsx").toString
+
+  /** one zip entry's uncompressed bytes */
+  private def part(path: String, name: String): Array[Byte] = {
+    val zf = new ZipFile(path)
+    try zf.getInputStream(zf.getEntry(name)).readAllBytes()
+    finally zf.close()
+  }
+
+  /** the sheet-part spelling of the String-building encoder the streaming
+    * one replaced (it dropped control characters): the oracle for cells
+    * it wrote losslessly
+    */
+  private def stringSheetXml(rows: Seq[Seq[String]]): Array[Byte] = {
+    def xmlEscape(s: String): String = {
+      val sb = new StringBuilder(s.length)
+      s.foreach {
+        case '&' => sb.append("&amp;")
+        case '<' => sb.append("&lt;")
+        case '>' => sb.append("&gt;")
+        case '"' => sb.append("&quot;")
+        case '\r' => sb.append("&#13;")
+        case c if c < ' ' && c != '\t' && c != '\n' => ()
+        case c => sb.append(c)
+      }
+      sb.toString
+    }
+    val sb = new StringBuilder
+    sb.append("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""")
+    sb.append("""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""")
+    rows.zipWithIndex.foreach { case (row, r) =>
+      sb.append(s"""<row r="${r + 1}">""")
+      row.zipWithIndex.foreach { case (cell, c) =>
+        if (cell != null && cell.nonEmpty) {
+          sb.append(s"""<c r="${XlsxCodec.colName(c)}${r + 1}" t="inlineStr"><is><t xml:space="preserve">""")
+          sb.append(xmlEscape(cell))
+          sb.append("</t></is></c>")
+        }
+      }
+      sb.append("</row>")
+    }
+    sb.append("</sheetData></worksheet>")
+    sb.toString.getBytes(StandardCharsets.UTF_8)
+  }
 
   test("column naming is proper base-26 past Z (reference bug ducklakexl.py:570 fixed)") {
     assert(XlsxCodec.colName(0) == "A")
@@ -90,9 +137,14 @@ class XlsxCodecSpec extends AnyFunSuite {
   }
 
   test("property: write . read == id for random string matrices") {
-    // xml-legal strings without control chars (codec drops them by design)
-    val cellGen = Gen.listOf(Gen.oneOf(
-      Gen.alphaNumChar, Gen.oneOf(' ', '&', '<', '>', '"', '\'', 'é', 'ü', '中')))
+    // any UTF-16 unit: controls, U+FFFE/U+FFFF and lone surrogates go
+    // through `_xHHHH_`, and literal `_xHHHH_` text through `_x005F_`
+    val cellGen = Gen.listOf(Gen.frequency(
+      4 -> Gen.alphaNumChar.map(_.toString),
+      3 -> Gen.choose(Char.MinValue, Char.MaxValue).map(_.toString),
+      2 -> Gen.oneOf(" ", "&", "<", ">", "\"", "'", "é", "中", "\t", "\n", "\r",
+        "\u0000", "\u0001", "\u001f", "\ufffe", "\uffff", "\ud800", "\udc00",
+        "\ud83d\ude00", "_", "_x", "_x0041_", "_x005F_", "_xd83D_", "_x00zz_")))
       .map(_.mkString)
     val rowGen = Gen.choose(0, 6).flatMap(n => Gen.listOfN(n, cellGen))
     val gridGen = Gen.choose(0, 8).flatMap(n => Gen.listOfN(n, rowGen))
@@ -108,8 +160,110 @@ class XlsxCodecSpec extends AnyFunSuite {
         .map(_.reverse.dropWhile(_.isEmpty).reverse.toList).toList
       back == grid
     }
-    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(60), prop)
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(200), prop)
     assert(res.passed, res.status.toString)
+  }
+
+  test("XML-illegal units are written as _xHHHH_ and a literal _xHHHH_ as _x005F_xHHHH_") {
+    val p = tmpXlsx()
+    val cells = Seq("a\u0001", "zz\uffff", "lone\ud800", "_x0041_", "keep_x_and_x12_", "\ud83d\ude00")
+    XlsxCodec.write(p, Seq(("t_x0041_", Seq(cells))))
+    val xml = new String(part(p, "xl/worksheets/sheet1.xml"), StandardCharsets.UTF_8)
+    for (spelled <- Seq(">a_x0001_<", ">zz_xFFFF_<", ">lone_xD800_<", ">_x005F_x0041_<",
+        ">keep_x_and_x12_<", ">\ud83d\ude00<"))
+      assert(xml.contains(spelled), s"$spelled not in $xml")
+    assert(new String(part(p, "xl/workbook.xml"), StandardCharsets.UTF_8)
+      .contains("name=\"t_x005F_x0041_\""))
+    assert(XlsxCodec.read(p) == Seq(("t_x0041_", Seq(cells))))
+    assert(XlsxCodec.readOne(p, "t_x0041_").contains(Seq(cells)))
+  }
+
+  test("shared strings decode _xHHHH_ escapes as Excel writes them") {
+    val p = tmpXlsx()
+    val zip = new java.util.zip.ZipOutputStream(Files.newOutputStream(java.nio.file.Paths.get(p)))
+    def put(n: String, body: String): Unit = {
+      zip.putNextEntry(new java.util.zip.ZipEntry(n))
+      zip.write(body.getBytes("UTF-8")); zip.closeEntry()
+    }
+    put("xl/workbook.xml",
+      """<?xml version="1.0"?><workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships"><sheets><sheet name="s" sheetId="1" r:id="rId1"/></sheets></workbook>""")
+    put("xl/worksheets/sheet1.xml",
+      """<?xml version="1.0"?><worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData><row r="1"><c r="A1" t="s"><v>0</v></c><c r="B1" t="s"><v>1</v></c><c r="C1"><v>_x0041_</v></c></row></sheetData></worksheet>""")
+    put("xl/sharedStrings.xml",
+      """<sst xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><si><t>tab_x0009_bell_x0007_</t></si><si><r><t>_x005F_</t></r><r><t>x0041_</t></r></si></sst>""")
+    zip.close()
+    // a numeric <v> is not ST_Xstring text: it stays as written
+    assert(XlsxCodec.read(p).head._2 == Seq(Seq("tab\tbell\u0007", "_x0041_", "_x0041_")))
+  }
+
+  test("sheet parts are byte-identical to the String encoder this one replaced") {
+    val wide = (0 until 30).map(i => if (i % 7 == 3) "" else s"w$i")
+    val grid = Seq(
+      Seq("plain", "a & b", "x<y>z", "say \"hi\"", "it's"),
+      Seq("tab\there", "lf\nhere", "cr\rhere", "crlf\r\n", "\ud83d\ude00 non-BMP \u4e2d"),
+      Seq(null, "", "after blanks", null),
+      Seq.empty,
+      wide,
+      Seq("_x not an escape", "_x12_", "\u00e9\u00fc", "end"))
+    val fixture = XlsxCodec.read("fixtures/excel_authored_lake.xlsx")
+    val cases = Seq(
+      Seq(("grid", grid)),
+      Seq(("empty", Seq.empty[Seq[String]])),
+      fixture)
+    for (sheets <- cases) {
+      val p = tmpXlsx()
+      XlsxCodec.write(p, sheets)
+      sheets.zipWithIndex.foreach { case ((n, rows), i) =>
+        val got = part(p, s"xl/worksheets/sheet${i + 1}.xml")
+        assert(java.util.Arrays.equals(got, stringSheetXml(rows)), s"sheet $n")
+      }
+    }
+  }
+
+  test("a 20,000-row x 8-column write allocates under 16 MB on the calling thread") {
+    val rows = (0 until 20000).map(r => (0 until 8).map(c => s"cell-$r-$c value & more"))
+    val sheets = Seq(("big", rows))
+    val p = tmpXlsx()
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread().getId
+    XlsxCodec.write(p, sheets) // class loading and first-use setup
+    val before = mx.getThreadAllocatedBytes(tid)
+    XlsxCodec.write(p, sheets)
+    val mb = (mx.getThreadAllocatedBytes(tid) - before) / 1e6
+    assert(mb < 16.0, f"write allocated $mb%.1f MB")
+    assert(XlsxCodec.read(p).head._2 == rows)
+  }
+
+  test("a write that fails mid-sheet leaves the target as it was and no temp file") {
+    val dir = Files.createTempDirectory("codec_fail")
+    val target = dir.resolve("lake.xlsx")
+    def failingAt(k: Int): Seq[Seq[String]] =
+      LazyList.tabulate(k + 10)(i =>
+        if (i == k) throw new IllegalStateException(s"row $k") else Seq(s"r$i", "payload" * 20))
+    def leftovers() = {
+      val s = Files.list(dir)
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith(".xlsx-") && n.endsWith(".tmp")).toList
+      finally s.close()
+    }
+    for (k <- Seq(0, 5000)) {
+      // first create: nothing appears under the target's name
+      val e = intercept[IllegalStateException](
+        XlsxCodec.write(target.toString, Seq(("ok", Seq(Seq("a"))), ("bad", failingAt(k)))))
+      assert(e.getMessage == s"row $k")
+      assert(!Files.exists(target))
+      assert(leftovers().isEmpty)
+    }
+    XlsxCodec.write(target.toString, Seq(("ok", Seq(Seq("a", "b")))))
+    val published = Files.readAllBytes(target)
+    for (k <- Seq(0, 5000)) {
+      intercept[IllegalStateException](
+        XlsxCodec.write(target.toString, Seq(("bad", failingAt(k)))))
+      assert(java.util.Arrays.equals(Files.readAllBytes(target), published))
+      assert(leftovers().isEmpty)
+    }
+    assert(XlsxCodec.read(target.toString) == Seq(("ok", Seq(Seq("a", "b")))))
   }
 
   test("reads an Excel-style workbook: shared strings, native bools, styles") {

@@ -53,6 +53,9 @@ import graft.xlsx.ExcelRemote
   *  - the push is compare-and-set on the snapshot head and writes only the
   *    sheets that changed ([[graft.lake.CatalogSync]]); the reference is
   *    last-push-wins and rewrites every sheet (README.md:3-4,150-156).
+  *  - DuckDB resolves catalog-backed names itself (ducklakexl.py:236-241);
+  *    here `syncViews` alone owns the lake's temp views (TEMP tables, lake
+  *    views). Metadata relations are built by the statement naming them.
   */
 class DuckLakeXLSpark(
     val spark: SparkSession,
@@ -109,10 +112,16 @@ class DuckLakeXLSpark(
     * snapshot lives in executor block storage (MEMORY_AND_DISK), the
     * right home for the staging-sized tables this idiom carries; a
     * cluster job staging terabytes should CTAS a real lake table instead.
-    * Declared BEFORE initialize(): registerViews reads it during
+    * Declared BEFORE initialize(): syncViews reads it during
     * construction (field initializers run in declaration order).
     */
   private var tempTables = Map.empty[String, DataFrame]
+
+  // what syncViews last reconciled against, and every temp view name the
+  // lake registered since (its own and the statements' metadata relations)
+  private var syncedState: CatalogState = null
+  private var syncedTemps: Map[String, DataFrame] = null
+  private var syncedNames = Set.empty[String]
 
   initialize()
 
@@ -353,7 +362,7 @@ class DuckLakeXLSpark(
     // withLakeConfs: bootstrap parses stored view SQL in lake dialect
     withLakeConfs {
       state = sync.bootstrap(seedState())
-      registerViews()
+      syncViews()
     }
   }
 
@@ -455,7 +464,7 @@ class DuckLakeXLSpark(
     */
   private def withCatalogSync[A](body: => A): A = {
     sync.pullIfPresent().foreach(state = _)
-    val out = body
+    val out = try body finally syncViews()
     push()
     out
   }
@@ -471,20 +480,14 @@ class DuckLakeXLSpark(
     * sweep's.
     */
   def sql(script: String): DataFrame = withLakeConfs {
-    val macrosBefore = macros
-    val preparedBefore = prepared
-    val tempBefore = tempTables
+    val before = TxnSnapshot(state, macros, prepared, tempTables)
     try sqlOnce(script)
     catch {
       case _: java.util.ConcurrentModificationException =>
         // the rejected attempt committed nothing; roll session macro +
         // prepared-statement + temp-table registrations back too so the
-        // replayed script re-runs cleanly
-        macros = macrosBefore
-        prepared = preparedBefore
-        (tempTables.keySet -- tempBefore.keySet).foreach(spark.catalog.dropTempView)
-        tempTables = tempBefore
-        tempBefore.foreach { case (n, df) => df.createOrReplaceTempView(n) }
+        // replayed script re-runs cleanly (the replay pulls a fresh base)
+        restoreTxnSnapshot(before)
         sqlOnce(script)
     }
   }
@@ -500,11 +503,8 @@ class DuckLakeXLSpark(
   private def isTempTable(name: String): Boolean =
     !name.contains(".") && tempTables.contains(name.toLowerCase)
 
-  private def putTempTable(name: String, df: DataFrame): Unit = {
-    val snap = df.localCheckpoint(true)
-    tempTables += name.toLowerCase -> snap
-    snap.createOrReplaceTempView(name)
-  }
+  private def putTempTable(name: String, df: DataFrame): Unit =
+    tempTables += name.toLowerCase -> df.localCheckpoint(true)
 
   // ---- sequences: `ducklake_metadata` rows `seq:<name>` -> "last,incr[,drawn]"
   // (third field 0 = created but never drawn; absent in pre-r10 lakes =
@@ -612,7 +612,6 @@ class DuckLakeXLSpark(
   }
 
   private def sqlOnce(script: String): DataFrame = withCatalogSync {
-    registerViews()
     var last: Option[DataFrame] = None
     // explicit-transaction scope: BEGIN snapshots (catalog, macros,
     // prepared statements, temp tables — DuckDB's temp schema and PREPARE
@@ -645,6 +644,9 @@ class DuckLakeXLSpark(
           throw e
       }
     persistCompleted { withLakeCatalog { StatementRouter.split(script).foreach { stmt00 =>
+      // the previous statement may have changed the catalog or the temp
+      // tables: bring the session's views up to date before this one
+      syncViews()
       // sequence draws evaluate TEXTUALLY on the driver (each occurrence
       // draws once, left to right) — sound for INSERT … VALUES and
       // FROM-less SELECTs. An INSERT … SELECT nextval(…) … FROM <scan>
@@ -692,11 +694,14 @@ class DuckLakeXLSpark(
       // expand macro calls textually before re-classifying — but never
       // inside macro DDL itself (a CREATE OR REPLACE MACRO whose head
       // matches an existing macro must not expand its own signature)
-      val classified = StatementRouter.classify(stmtE) match {
-        case m @ (_: StatementRouter.CreateMacro | _: StatementRouter.DropMacro) => m
-        case c if macros.isEmpty => c
-        case _ => StatementRouter.classify(StatementRouter.expandMacros(stmtE, macros))
+      val (classified, stmtText) = StatementRouter.classify(stmtE) match {
+        case m @ (_: StatementRouter.CreateMacro | _: StatementRouter.DropMacro) => (m, stmtE)
+        case c if macros.isEmpty => (c, stmtE)
+        case _ =>
+          val x = StatementRouter.expandMacros(stmtE, macros)
+          (StatementRouter.classify(x), x)
       }
+      registerNamedMeta(stmtText) // SELECTs, DML fragments, view bodies
       val preSnap = state.currentSnapshot
       classified match {
         case s: StatementRouter.CreateTable if s.temp =>
@@ -716,14 +721,14 @@ class DuckLakeXLSpark(
           } else putTempTable(s.name, sqlSelect((s.select)))
         case s: StatementRouter.CreateTable =>
           if (s.orReplace) executeDrop(StatementRouter.DropTable(s.name, ifExists = true))
-          executeCreate(s); registerViews()
+          executeCreate(s)
         case s: StatementRouter.CreateTableAs =>
           if (s.orReplace) executeDrop(StatementRouter.DropTable(s.name, ifExists = true))
-          executeCtas(s); registerViews()
+          executeCtas(s)
         case s: StatementRouter.CopyTo        => executeCopy(s)
-        case s: StatementRouter.CopyFrom      => executeCopyFrom(s); registerViews()
+        case s: StatementRouter.CopyFrom      => executeCopyFrom(s)
         case s: StatementRouter.ExportDb      => executeExportDb(s)
-        case s: StatementRouter.ImportDb      => executeImportDb(s); registerViews()
+        case s: StatementRouter.ImportDb      => executeImportDb(s)
         case s: StatementRouter.InsertValues if isTempTable(s.table) =>
           insertIntoTemp(s.table, s.cols, tempValuesDF(s.table, s.cols, s.valuesSql))
         case s: StatementRouter.InsertValues =>
@@ -733,7 +738,6 @@ class DuckLakeXLSpark(
           // below keeps file-per-partition, the shape a distributed INSERT
           // produces
           executeInsertDF(s.table, s.cols, valuesDF(s.table, s.cols, s.valuesSql))
-          registerViews()
         case s: StatementRouter.InsertSelect if isTempTable(s.table) =>
           require(!StatementRouter.hasCall(s.select, "nextval") && !s.byName,
             "INSERT into a TEMP table takes a plain SELECT " +
@@ -752,7 +756,6 @@ class DuckLakeXLSpark(
             executeInsertDF(s.table, Some(df.columns.toSeq), df)
           } else
             executeInsertDF(s.table, s.cols, sqlSelect((s.select)))
-          registerViews()
         case s: StatementRouter.Delete if isTempTable(s.table) =>
           throw new IllegalArgumentException(
             s"DELETE on TEMP table ${s.table} is not supported — " +
@@ -767,18 +770,17 @@ class DuckLakeXLSpark(
             "recreate it with CREATE OR REPLACE TEMP TABLE … AS SELECT")
         case s: StatementRouter.Returning =>
           last = Some(executeReturning(s))
-        case s: StatementRouter.Delete        => executeDelete(s); registerViews()
-        case s: StatementRouter.Merge         => executeMerge(s); registerViews()
-        case s: StatementRouter.InsertOnConflict => executeUpsert(s); registerViews()
-        case s: StatementRouter.Update        => executeUpdate(s); registerViews()
+        case s: StatementRouter.Delete        => executeDelete(s)
+        case s: StatementRouter.Merge         => executeMerge(s)
+        case s: StatementRouter.InsertOnConflict => executeUpsert(s)
+        case s: StatementRouter.Update        => executeUpdate(s)
         case s: StatementRouter.DropTable if isTempTable(s.name) =>
           // DuckDB's search path: a bare DROP TABLE hits temp first
           tempTables -= s.name.toLowerCase
-          spark.catalog.dropTempView(s.name)
-        case s: StatementRouter.DropTable     => executeDrop(s); registerViews()
-        case s: StatementRouter.AlterTable    => executeAlter(s); registerViews()
-        case s: StatementRouter.CreateView    => executeCreateView(s); registerViews()
-        case s: StatementRouter.DropView      => executeDropView(s); registerViews()
+        case s: StatementRouter.DropTable     => executeDrop(s)
+        case s: StatementRouter.AlterTable    => executeAlter(s)
+        case s: StatementRouter.CreateView    => executeCreateView(s)
+        case s: StatementRouter.DropView      => executeDropView(s)
         case StatementRouter.Use(name) =>
           // USE <lake> | USE <schema> | USE <lake>.<schema>
           val parts = name.split('.')
@@ -810,7 +812,7 @@ class DuckLakeXLSpark(
             s"no such sequence: ${s.name}")
           state = state.copy(metadata = state.metadata.filterNot(_._1 == key))
         case s: StatementRouter.CreateSchema => executeCreateSchema(s)
-        case s: StatementRouter.DropSchema   => executeDropSchema(s); registerViews()
+        case s: StatementRouter.DropSchema   => executeDropSchema(s)
         case a: StatementRouter.Attach =>
           // validate-or-noop: the lake is attached by the constructor; a
           // replayed reference init script (ducklakexl.py:236) must pass
@@ -818,7 +820,7 @@ class DuckLakeXLSpark(
           a.alias.foreach(al => require(al.equalsIgnoreCase(lakeName),
             s"ATTACH alias '$al' does not match this lake: $lakeName"))
         case StatementRouter.Detach => // noop — attachment is the object's lifetime
-        case s: StatementRouter.CommentOn => executeComment(s); registerViews()
+        case s: StatementRouter.CommentOn => executeComment(s)
         case StatementRouter.NoOp => // CREATE INDEX etc. — accepted, dropped
         case StatementRouter.Prepare(n, body) =>
           prepared += (n -> body)
@@ -987,25 +989,14 @@ class DuckLakeXLSpark(
       prepared: Map[String, String],
       tempTables: Map[String, DataFrame])
 
-  /** Restore session registries to a BEGIN snapshot (ROLLBACK and the
-    * end-of-script open-transaction guard share this). A CREATE VIEW or
-    * CREATE TEMP TABLE inside the transaction registered a temp view;
-    * restoring the catalog alone would leave it resolvable (temp views
-    * shadow the DSv2 catalog) — drop what the txn created, and re-register
-    * base temp tables so a txn-dropped or txn-replaced temp resolves to
-    * its pre-BEGIN content again. */
+  /** Restore session registries to a snapshot (ROLLBACK, the
+    * end-of-script open-transaction guard and `sql()`'s CAS replay share
+    * this). The session's temp views follow at the next [[syncViews]]. */
   private def restoreTxnSnapshot(base: TxnSnapshot): Unit = {
-    val txnViews = state.liveViews().map(_.viewName).toSet
     state = base.state
     macros = base.macros
     prepared = base.prepared
-    val txnTemps = tempTables
     tempTables = base.tempTables
-    (txnViews -- state.liveViews().map(_.viewName).toSet)
-      .foreach(spark.catalog.dropTempView)
-    (txnTemps.keySet -- tempTables.keySet).foreach(spark.catalog.dropTempView)
-    tempTables.foreach { case (n, df) => df.createOrReplaceTempView(n) }
-    registerViews()
   }
 
   /** DuckLake-style `changes_made` summary for the audit sheet */
@@ -1101,16 +1092,6 @@ class DuckLakeXLSpark(
     out.toString
   }
 
-  /** make lake-qualified names (`my_ducklake.main.t`, `main.t`) resolve to
-    * the registered bare views (reference: qualified resolution inside
-    * DuckDB, ducklakexl.py:657,716 / README.md:70), turn the time
-    * travel syntaxes `t AT (VERSION => n)` / `t VERSION AS OF n` and their
-    * timestamp twins `t AT (TIMESTAMP => 'ts')` / `t TIMESTAMP AS OF 'ts'`
-    * (README.md:162-165 names this TODO; DuckDB/Spark spellings) into a
-    * snapshot-pinned temp view backed by [[tableAt]], and route
-    * `information_schema.tables|columns` to the catalog-backed views
-    * (the reference's own bootstrap queries it — ducklakexl.py:238).
-    */
   /** DML expression fragments (DELETE WHERE, UPDATE SET, MERGE ON/SET,
     * INSERT VALUES bodies) are user DuckDB SQL like any SELECT — they
     * MUST ride the dialect rewrites before `expr()`: a raw `tags[1]` in a
@@ -1509,6 +1490,14 @@ class DuckLakeXLSpark(
     else org.apache.spark.sql.graftshim.DatasetBridge.ofRows(spark, fixed)
   }
 
+  /** The text rewrites every lake SELECT rides before parsing: bare-name
+    * time travel (`t AT (VERSION => n)`, `t VERSION AS OF n` and their
+    * timestamp twins; README.md:162-165) to a snapshot-pinned temp view,
+    * `information_schema.tables|columns` and `duckdb_tables|columns()`
+    * (ducklakexl.py:238) to relations built here from the current catalog
+    * (bare `ducklake_*`: [[registerNamedMeta]]), file reads, and the DuckDB
+    * dialect spellings.
+    */
   private[graft] def rewriteSelect(q00: String): String = {
     // recursive UNION-distinct CTEs first: they evaluate ITERATIVELY
     // (sub-queries re-enter this pipeline), leaving a registered view +
@@ -1572,11 +1561,12 @@ class DuckLakeXLSpark(
       s = SnapshotsRe.replaceAllIn(s, { _ =>
         snapshots().createOrReplaceTempView("__snapshots"); "__snapshots"
       })
-      s = InfoSchemaRe.replaceAllIn(s, m => "__info_" + m.group(1).toLowerCase)
+      s = InfoSchemaRe.replaceAllIn(s,
+        m => registerMetaView("__info_" + m.group(1).toLowerCase))
       // DuckDB's own metadata table functions — the habitual spellings a
       // DuckDB user types before reaching for information_schema
-      s = DuckTablesRe.replaceAllIn(s, _ => "__duckdb_tables")
-      s = DuckColumnsRe.replaceAllIn(s, _ => "__duckdb_columns")
+      s = DuckTablesRe.replaceAllIn(s, _ => registerMetaView("__duckdb_tables"))
+      s = DuckColumnsRe.replaceAllIn(s, _ => registerMetaView("__duckdb_columns"))
       s
     }
     // COLUMNS('re') / COLUMNS(*) star expansion needs the catalog schema,
@@ -2637,7 +2627,6 @@ class DuckLakeXLSpark(
           snapshotChanges = state.snapshotChanges ++
             ((pre + 1) to post).map(SnapshotChangeRow(_,
               s"inserted_into_table:${splitQual(table)._2}")))
-        registerViews()
       }
     }
     try once()
@@ -2687,7 +2676,7 @@ class DuckLakeXLSpark(
     * schema, no execution (the describeTable output shape)
     */
   def describeQuery(select: String): DataFrame = {
-    val rows = withLakeCatalog(sqlSelect((select)))
+    val rows = withLakeCatalog { registerNamedMeta(select); sqlSelect(select) }
       .schema.fields.toVector.map { f =>
         val tn = try CatalogSchema.typeName(f.dataType)
                  catch { case _: IllegalArgumentException => f.dataType.sql }
@@ -3057,35 +3046,37 @@ class DuckLakeXLSpark(
   def currentState: CatalogState = state
 
   // ----------------------------------------------------------- internals
-  private def registerViews(): Unit = {
-    // lake TABLES are no longer mirrored as temp views: inside sql() the
-    // DSv2 catalog is current, so bare/qualified names resolve natively
-    // (and two schemas may hold same-named tables, which one flat temp-view
-    // namespace cannot express)
-    registerInfoSchema()
-    // SQL views on top of the tables, in creation order (a later view may
-    // reference an earlier one); a view whose base was dropped must not
-    // brick the whole lake on reopen. Resolution needs the catalog scope.
-    withLakeCatalog {
-      // a live TEMP table shadows a same-named lake view (DuckDB search
-      // path: temp first) — re-registering the view would un-shadow it
-      state.liveViews().filterNot(v => tempTables.contains(v.viewName.toLowerCase))
-        .foreach { v =>
-          try sqlSelect((v.sql)).createOrReplaceTempView(v.viewName)
-          catch { case e: Exception =>
-            DuckLakeXLSpark.log.warn("view {} skipped: {}", v.viewName, e.getMessage)
-          }
+  /** The one owner of the lake's temp views in the session: every TEMP
+    * table, then every live lake view no TEMP table shadows (temp first),
+    * after dropping every name registered since the last sync (metadata
+    * relations built on the old catalog too: a table that takes such a name
+    * must not stay shadowed). Lake tables resolve through the DSv2 catalog.
+    * Runs at construction, at the start of each statement and at the end of
+    * each commit bracket; a no-op unless `state` or `tempTables` is new.
+    */
+  private def syncViews(): Unit = if ((state ne syncedState) || (tempTables ne syncedTemps)) {
+    syncedNames.foreach(spark.catalog.dropTempView)
+    syncedNames = tempTables.keySet
+    tempTables.foreach { case (n, df) => df.createOrReplaceTempView(n) }
+    // SQL views in creation order (a later view may reference an earlier
+    // one); a view whose base was dropped must not brick the whole lake
+    // on reopen. Resolution needs the catalog scope.
+    val views = state.liveViews().filterNot(v => tempTables.contains(v.viewName.toLowerCase))
+    if (views.nonEmpty) withLakeCatalog {
+      views.foreach { v =>
+        registerNamedMeta(v.sql)
+        try {
+          sqlSelect(v.sql).createOrReplaceTempView(v.viewName)
+          syncedNames += v.viewName.toLowerCase
+        } catch { case e: Exception =>
+          DuckLakeXLSpark.log.warn("view {} skipped: {}", v.viewName, e.getMessage)
         }
+      }
     }
+    syncedState = state
+    syncedTemps = tempTables
   }
 
-  /** `information_schema.tables` / `.columns` as catalog-backed views
-    * (SURVEY §2: expose catalog state as views). Mirrors what the DuckDB
-    * pass-through shows the reference: the user tables under the lake
-    * catalog, and the DuckLake metadata tables under
-    * `__ducklake_metadata_<lake>` — the reference's own bootstrap lists
-    * those (ducklakexl.py:238-241), so a replayed init script works.
-    */
   /** r16 (reference README.md:164-165 upstream TODO, closable offline):
     * the metadata tables themselves as snapshot-versioned relations.
     * Catalog rows already carry begin_snapshot/end_snapshot columns, so
@@ -3184,80 +3175,96 @@ class DuckLakeXLSpark(
     }
   }
 
-  private def registerInfoSchema(): Unit = {
-    val metaCatalog = s"__ducklake_metadata_$lakeName"
-    // bare metadata-table names resolve to the versioned catalog rows
-    // unless a user table shadows them (user catalog wins, like there)
-    for (n <- Seq("ducklake_table", "ducklake_schema", "ducklake_column",
-        "ducklake_snapshot", "ducklake_data_file", "ducklake_delete_file"))
-      if (state.tableByName(n).isEmpty)
-        metaTableDf(n, None).foreach(_.createOrReplaceTempView(n))
-    val tRows =
-      state.liveTables().sortBy(_.tableName).map(t =>
-        Row(lakeName, schemaNameOf(t), t.tableName, "BASE TABLE",
-          state.tagOf(t.tableId, "comment").orNull)) ++
-      state.liveViews().sortBy(_.viewName).map(v =>
-        Row(lakeName, "main", v.viewName, "VIEW", null)) ++
-      CatalogSchema.tables.map { case (name, _) =>
-        Row(metaCatalog, "main", name, "BASE TABLE", null)
-      }
-    spark.createDataFrame(tRows.asJava, StructType(Seq(
-      StructField("table_catalog", StringType, false),
-      StructField("table_schema", StringType, false),
-      StructField("table_name", StringType, false),
-      StructField("table_type", StringType, false),
-      StructField("comment", StringType, true))))
-      .createOrReplaceTempView("__info_tables")
-    val cRows = state.liveTables().sortBy(_.tableName).flatMap { t =>
-      state.columnsOf(t.tableId).map(c =>
-        Row(lakeName, schemaNameOf(t), t.tableName, c.columnName,
-          (c.columnOrder + 1).toLong, c.columnType,
-          if (c.nullsAllowed) "YES" else "NO",
-          state.columnTagOf(t.tableId, c.columnId, "comment").orNull))
+  /** Build each bare `ducklake_*` relation `text` names and no table, view
+    * or TEMP table holds, quoted spans included (a false positive costs one
+    * build); once per statement and per view body, never per nested SELECT. */
+  private def registerNamedMeta(text: String): Unit =
+    MetaTableRe.findAllIn(text).map(_.toLowerCase(java.util.Locale.ROOT)).toSet
+      .filter(n => state.tableByName(n).isEmpty && state.viewByName(n).isEmpty &&
+        !tempTables.contains(n))
+      .foreach(registerMetaView)
+
+  /** Build the catalog-backed relation `name` from the current `state` as
+    * a temp view, for the statement that named it; returns `name`.
+    * `information_schema.tables` / `.columns` (SURVEY §2) mirror what the
+    * DuckDB pass-through shows the reference: user tables under the lake
+    * catalog, metadata tables under `__ducklake_metadata_<lake>`, as its
+    * bootstrap lists them (ducklakexl.py:238-241).
+    */
+  private def registerMetaView(name: String): String = {
+    val df = name match {
+      case "__info_tables" =>
+        val metaCatalog = s"__ducklake_metadata_$lakeName"
+        val tRows =
+          state.liveTables().sortBy(_.tableName).map(t =>
+            Row(lakeName, schemaNameOf(t), t.tableName, "BASE TABLE",
+              state.tagOf(t.tableId, "comment").orNull)) ++
+          state.liveViews().sortBy(_.viewName).map(v =>
+            Row(lakeName, "main", v.viewName, "VIEW", null)) ++
+          CatalogSchema.tables.map { case (meta, _) =>
+            Row(metaCatalog, "main", meta, "BASE TABLE", null)
+          }
+        spark.createDataFrame(tRows.asJava, StructType(Seq(
+          StructField("table_catalog", StringType, false),
+          StructField("table_schema", StringType, false),
+          StructField("table_name", StringType, false),
+          StructField("table_type", StringType, false),
+          StructField("comment", StringType, true))))
+      case "__info_columns" =>
+        val cRows = state.liveTables().sortBy(_.tableName).flatMap { t =>
+          state.columnsOf(t.tableId).map(c =>
+            Row(lakeName, schemaNameOf(t), t.tableName, c.columnName,
+              (c.columnOrder + 1).toLong, c.columnType,
+              if (c.nullsAllowed) "YES" else "NO",
+              state.columnTagOf(t.tableId, c.columnId, "comment").orNull))
+        }
+        spark.createDataFrame(cRows.asJava, StructType(Seq(
+          StructField("table_catalog", StringType, false),
+          StructField("table_schema", StringType, false),
+          StructField("table_name", StringType, false),
+          StructField("column_name", StringType, false),
+          StructField("ordinal_position", LongType, false),
+          StructField("data_type", StringType, false),
+          StructField("is_nullable", StringType, false),
+          StructField("comment", StringType, true))))
+      // duckdb_tables() / duckdb_columns() — the native-metadata spellings,
+      // with the columns users actually read (estimated_size = the
+      // catalog's exact record count — per-file counts + inlined rows —
+      // answered from the metadata plane like the bare count(*) shortcut)
+      case "__duckdb_tables" =>
+        val dtRows = state.liveTables().sortBy(_.tableName).map { t =>
+          Row(lakeName, schemaNameOf(t), t.tableName,
+            state.tagOf(t.tableId, "pk").isDefined,
+            state.filesOf(t.tableId).map(_.recordCount).sum +
+              state.inlinedOf(t.tableId).size,
+            state.columnsOf(t.tableId).size.toLong)
+        }
+        spark.createDataFrame(dtRows.asJava, StructType(Seq(
+          StructField("database_name", StringType, false),
+          StructField("schema_name", StringType, false),
+          StructField("table_name", StringType, false),
+          StructField("has_primary_key", BooleanType, false),
+          StructField("estimated_size", LongType, false),
+          StructField("column_count", LongType, false))))
+      case "__duckdb_columns" =>
+        val dcRows = state.liveTables().sortBy(_.tableName).flatMap { t =>
+          state.columnsOf(t.tableId).map(c =>
+            Row(lakeName, schemaNameOf(t), t.tableName, c.columnName,
+              c.columnOrder.toLong, c.columnType, c.nullsAllowed))
+        }
+        spark.createDataFrame(dcRows.asJava, StructType(Seq(
+          StructField("database_name", StringType, false),
+          StructField("schema_name", StringType, false),
+          StructField("table_name", StringType, false),
+          StructField("column_name", StringType, false),
+          StructField("column_index", LongType, false),
+          StructField("data_type", StringType, false),
+          StructField("is_nullable", BooleanType, false))))
+      case n => metaTableDf(n, None).get // a bare name: full history
     }
-    spark.createDataFrame(cRows.asJava, StructType(Seq(
-      StructField("table_catalog", StringType, false),
-      StructField("table_schema", StringType, false),
-      StructField("table_name", StringType, false),
-      StructField("column_name", StringType, false),
-      StructField("ordinal_position", LongType, false),
-      StructField("data_type", StringType, false),
-      StructField("is_nullable", StringType, false),
-      StructField("comment", StringType, true))))
-      .createOrReplaceTempView("__info_columns")
-    // duckdb_tables() / duckdb_columns() — the native-metadata spellings,
-    // with the columns users actually read (estimated_size = the
-    // catalog's exact record count — per-file counts + inlined rows —
-    // answered from the metadata plane like the bare count(*) shortcut)
-    val dtRows = state.liveTables().sortBy(_.tableName).map { t =>
-      Row(lakeName, schemaNameOf(t), t.tableName,
-        state.tagOf(t.tableId, "pk").isDefined,
-        state.filesOf(t.tableId).map(_.recordCount).sum +
-          state.inlinedOf(t.tableId).size,
-        state.columnsOf(t.tableId).size.toLong)
-    }
-    spark.createDataFrame(dtRows.asJava, StructType(Seq(
-      StructField("database_name", StringType, false),
-      StructField("schema_name", StringType, false),
-      StructField("table_name", StringType, false),
-      StructField("has_primary_key", BooleanType, false),
-      StructField("estimated_size", LongType, false),
-      StructField("column_count", LongType, false))))
-      .createOrReplaceTempView("__duckdb_tables")
-    val dcRows = state.liveTables().sortBy(_.tableName).flatMap { t =>
-      state.columnsOf(t.tableId).map(c =>
-        Row(lakeName, schemaNameOf(t), t.tableName, c.columnName,
-          c.columnOrder.toLong, c.columnType, c.nullsAllowed))
-    }
-    spark.createDataFrame(dcRows.asJava, StructType(Seq(
-      StructField("database_name", StringType, false),
-      StructField("schema_name", StringType, false),
-      StructField("table_name", StringType, false),
-      StructField("column_name", StringType, false),
-      StructField("column_index", LongType, false),
-      StructField("data_type", StringType, false),
-      StructField("is_nullable", BooleanType, false))))
-      .createOrReplaceTempView("__duckdb_columns")
+    df.createOrReplaceTempView(name)
+    syncedNames += name
+    name
   }
 
   private def executeCreateView(s: StatementRouter.CreateView): Unit = {
@@ -3290,7 +3297,6 @@ class DuckLakeXLSpark(
         state = state.copy(views = state.views.map(x =>
           if (x.viewId == v.viewId && x.endSnapshot.isEmpty) x.copy(endSnapshot = Some(snap)) else x))
         newSnapshot(state.nextCatalogId, state.nextFileId)
-        spark.catalog.dropTempView(s.name)
     }
   }
 
@@ -3433,7 +3439,6 @@ class DuckLakeXLSpark(
     if (post > pre)
       state = state.copy(snapshotChanges = state.snapshotChanges ++
         ((pre + 1) to post).map(SnapshotChangeRow(_, s"inserted_into_table:$table")))
-    registerViews()
   }
 
   private def executeCtas(s: StatementRouter.CreateTableAs): Unit = {
@@ -3473,13 +3478,11 @@ class DuckLakeXLSpark(
           // one-file path, which a volatile row forfeits by nature.
           val df = img.localCheckpoint(true)
           executeInsertDF(iv.table, None, df)
-          registerViews()
           df
         } else {
           // a deterministic VALUES literal — recompute the post-image
           // instead of checkpointing, keeping the inline/one-file path
           executeInsertDF(iv.table, iv.cols, valuesDF(iv.table, iv.cols, iv.valuesSql))
-          registerViews()
           postImage()
         }
       case is: StatementRouter.InsertSelect =>
@@ -3492,14 +3495,12 @@ class DuckLakeXLSpark(
           defaultTextsOf(t).map { case (k, v) => k -> dexpr(v) })
           .localCheckpoint(true)
         executeInsertDF(is.table, None, df)
-        registerViews()
         df
       case d: StatementRouter.Delete =>
         require(!isTempTable(d.table), "RETURNING on a TEMP table is not supported")
         val pre = sqlSelect((s"SELECT * FROM ${d.table}" +
           d.where.map(w => s" WHERE $w").getOrElse(""))).localCheckpoint(true)
         executeDelete(d)
-        registerViews()
         pre
       case u: StatementRouter.Update =>
         require(!isTempTable(u.table), "RETURNING on a TEMP table is not supported")
@@ -3515,7 +3516,6 @@ class DuckLakeXLSpark(
         val pre = sqlSelect((s"SELECT $proj FROM ${u.table}" +
           u.where.map(w => s" WHERE $w").getOrElse(""))).localCheckpoint(true)
         executeUpdate(u)
-        registerViews()
         pre
       case other => throw new IllegalStateException(s"unreachable RETURNING: $other")
     }
@@ -4205,7 +4205,6 @@ class DuckLakeXLSpark(
           if (x.tableId == t.tableId && x.endSnapshot.isEmpty) x.copy(endSnapshot = Some(snap)) else x)
           :+ t.copy(beginSnapshot = snap, endSnapshot = None, tableName = newName))
         newSnapshot(state.nextCatalogId, state.nextFileId)
-        spark.catalog.dropTempView(s.table)
       case StatementRouter.AddColumn(name, sqlType) =>
         // the captured "type" may carry a constraint tail (DEFAULT /
         // NOT NULL / CHECK) — parse it like a CREATE TABLE column def
@@ -4457,13 +4456,14 @@ class DuckLakeXLSpark(
     * is exactly what the reference's engine does with its own
     * ducklake_data_file counts. Bails to the real scan (returns None)
     * for anything but the bare shape — predicates, grouping, aliases on
-    * the table, time travel — and for tables with live merge-on-read
-    * positional deletes (foreign-written delete files), where deletion
-    * overlap makes the arithmetic unsafe. The column is named exactly as
-    * the scan path would name it, so the shortcut is indistinguishable.
+    * the table, time travel, a TEMP table shadowing the name — and for
+    * tables with live merge-on-read positional deletes (foreign-written
+    * delete files), where deletion overlap makes the arithmetic unsafe.
+    * The column is named exactly as the scan path would name it, so the
+    * shortcut is indistinguishable.
     */
   private def metadataCountStar(q: String): Option[DataFrame] = q match {
-    case CountStarRe(alias, name) =>
+    case CountStarRe(alias, name) if !isTempTable(name.replace("\"", "")) =>
       resolveTable(name.replace("\"", "")).flatMap { t =>
         if (state.positionalDeletes(t.tableId).nonEmpty) None
         else {
@@ -4617,7 +4617,6 @@ class DuckLakeXLSpark(
           inlinedData = state.inlinedData.map(x =>
             if (x.tableId == t.tableId && x.endSnapshot.isEmpty) x.copy(endSnapshot = Some(snap)) else x))
         newSnapshot(state.nextCatalogId, state.nextFileId)
-        spark.catalog.dropTempView(s.name)
     }
   }
 
@@ -4830,7 +4829,6 @@ class DuckLakeXLSpark(
     }
     state = ns2
     newSnapshot(state.nextCatalogId, fid2)
-    registerViews()
   }
 
   /** Register EXISTING parquet files into `table` WITHOUT rewriting them
@@ -4917,7 +4915,6 @@ class DuckLakeXLSpark(
       SnapshotChangeRow(snap, s"added_data_files:${t.tableName}"))
     state = state.copy(tableStats = bumpStats(t.tableId, added))
     newSnapshot(nextId, fid)
-    registerViews()
   }
 
   /** Retention maintenance (DuckLake `expire_snapshots`): drop time travel
@@ -5104,4 +5101,6 @@ object DuckLakeXLSpark {
   private val InfoSchemaRe = """(?i)(?<!\.)\binformation_schema\.(tables|columns)\b""".r
   private val DuckTablesRe = """(?i)\bduckdb_tables\s*\(\s*\)""".r
   private val DuckColumnsRe = """(?i)\bduckdb_columns\s*\(\s*\)""".r
+  private val MetaTableRe =
+    """(?i)\bducklake_(?:table|schema|column|snapshot|data_file|delete_file)\b""".r
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.DuckLakeXLSpark
@@ -547,5 +548,78 @@ class DuckLakeXLSparkSpec extends AnyFunSuite {
     lake.sql("CREATE TABLE p(k VARCHAR, x INTEGER); ALTER TABLE p SET PARTITIONED BY (k)")
     lake.sql("INSERT INTO p VALUES (' a', 1), ('b', 2)")
     assert(lake.sql("SELECT x FROM p WHERE k = ' a'").collect().map(_.getInt(0)).toSeq == Seq(1))
+  }
+
+  test("a lake view dropped by another writer stops resolving after the pull") {
+    val (a, xlsx, data) = freshLake()
+    a.sql("CREATE TABLE xw_t(id INTEGER); INSERT INTO xw_t VALUES (1),(2); " +
+      "CREATE VIEW xw_v AS SELECT * FROM xw_t")
+    assert(a.sql("SELECT count(*) AS c FROM xw_v").head().getLong(0) == 2L)
+    // the other writer runs on its own session, so its temp views are not
+    // the ones this lake registered
+    val other = spark.newSession()
+    def onOther[A](body: => A): A = {
+      val prev = SparkSession.getActiveSession
+      SparkSession.setActiveSession(other)
+      try body
+      finally prev.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+    }
+    val b = onOther(new DuckLakeXLSpark(other, xlsx, data))
+    onOther(b.sql("DROP VIEW xw_v"))
+    val e = intercept[Exception] { a.sql("SELECT count(*) AS c FROM xw_v") }
+    assert(e.getMessage.contains("TABLE_OR_VIEW_NOT_FOUND"), e.getMessage)
+    assert(a.currentState.liveViews().isEmpty)
+  }
+
+  test("metadata relations are built by the statement that names them, from its catalog") {
+    val (lake, _, _) = freshLake()
+    // one script: information_schema sees the table created before it,
+    // ducklake_data_file the files inserted before it
+    val r = lake.sql(
+      """CREATE TABLE mz(id INTEGER);
+        |CREATE TEMP TABLE mz_seen AS
+        |  SELECT count(*) AS c FROM information_schema.tables WHERE table_name = 'mz';
+        |INSERT INTO mz VALUES (1);
+        |INSERT INTO mz VALUES (2);
+        |SELECT (SELECT c FROM mz_seen) AS tables_seen, count(*) AS files
+        |  FROM ducklake_data_file f JOIN ducklake_table t ON f.table_id = t.table_id
+        |  WHERE t.table_name = 'mz'""".stripMargin).head()
+    assert((r.getLong(0), r.getLong(1)) == ((1L, 2L)))
+    // a double-quoted bare metadata name resolves too
+    assert(lake.sql("CREATE TABLE mz2(id INTEGER); " +
+      "SELECT table_name FROM \"ducklake_table\" WHERE table_name = 'mz2'")
+      .collect().map(_.getString(0)).toSeq == Seq("mz2"))
+    // a statement that names no metadata relation builds none
+    spark.catalog.dropTempView("__info_tables")
+    spark.catalog.dropTempView("ducklake_data_file")
+    lake.sql("INSERT INTO mz VALUES (3); SELECT count(*) AS c FROM mz").collect()
+    assert(!spark.catalog.tableExists("__info_tables"))
+    assert(!spark.catalog.tableExists("ducklake_data_file"))
+    // a lake table created under a metadata name wins over the relation
+    // an earlier statement built for that name
+    lake.sql("SELECT count(*) AS c FROM ducklake_snapshot").collect()
+    lake.sql("CREATE TABLE ducklake_snapshot(id INTEGER)")
+    assert(lake.sql("SELECT * FROM ducklake_snapshot").columns.toSeq == Seq("id"))
+  }
+
+  test("DML predicates, SET lists and view bodies may name metadata relations") {
+    val (lake, _, _) = freshLake()
+    lake.sql("CREATE TABLE md_t(id BIGINT); INSERT INTO md_t VALUES (1),(2),(3); " +
+      "CREATE VIEW md_v AS SELECT count(*) AS c FROM ducklake_snapshot")
+    // no earlier statement may leave the relations behind for these
+    Seq("ducklake_table", "ducklake_snapshot").foreach(spark.catalog.dropTempView)
+    lake.sql("DELETE FROM md_t WHERE id <= " +
+      "(SELECT count(*) FROM ducklake_table WHERE table_name = 'md_t')")
+    assert(lake.sql("SELECT id FROM md_t ORDER BY id").collect().map(_.getLong(0)).toSeq ==
+      Seq(2L, 3L))
+    Seq("ducklake_table", "ducklake_snapshot").foreach(spark.catalog.dropTempView)
+    val head = lake.currentState.currentSnapshot
+    lake.sql("UPDATE md_t SET id = (SELECT max(snapshot_id) FROM ducklake_snapshot) " +
+      "WHERE id = 3")
+    assert(lake.sql("SELECT id FROM md_t ORDER BY id").collect().map(_.getLong(0)).toSeq ==
+      Seq(2L, head))
+    // the view re-registers against the new catalog, its relation with it
+    assert(lake.sql("SELECT c FROM md_v").head().getLong(0) ==
+      lake.sql("SELECT count(*) AS c FROM ducklake_snapshot").head().getLong(0))
   }
 }

@@ -142,6 +142,19 @@ class R11EdgeSpec extends AnyFunSuite {
     // DML beyond INSERT refuses loudly
     val e2 = intercept[IllegalArgumentException] { lake.sql("DELETE FROM st WHERE one = 1") }
     assert(e2.getMessage.contains("TEMP"), e2.getMessage)
+    // dropping a TEMP table that shadows a lake VIEW un-shadows the view
+    // for the rest of the same script
+    lake.sql("CREATE VIEW v2 AS SELECT * FROM tb")
+    assert(lake.sql("CREATE TEMP TABLE v2 AS SELECT 42 AS id; DROP TABLE v2; " +
+      "SELECT count(*) AS c FROM v2").head().getLong(0) == 2L)
+    // a non-TEMP CREATE OR REPLACE replaces the lake table; the TEMP
+    // table of the same name keeps shadowing it (temp first)
+    lake.sql("CREATE TABLE x(id INTEGER); INSERT INTO x VALUES (1),(2),(3)")
+    assert(lake.sql("CREATE TEMP TABLE x AS SELECT 42 AS id; " +
+      "CREATE OR REPLACE TABLE x(id INTEGER); SELECT count(*) AS c FROM x")
+      .head().getLong(0) == 1L)
+    assert(lake.sql("SELECT max(id) AS m FROM x").head().getInt(0) == 42)
+    assert(lake.sql("DROP TABLE x; SELECT count(*) AS c FROM x").head().getLong(0) == 0L)
   }
 
   test("USING SAMPLE: unseeded % and ROWS forms run; seeded rows deterministic") {

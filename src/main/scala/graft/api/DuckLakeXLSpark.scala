@@ -28,7 +28,9 @@ import graft.xlsx.ExcelRemote
   * }}}
   *
   * Semantics preserved from the reference:
-  *  - pull/push bracket EVERY call, even pure SELECT (ducklakexl.py:387-397)
+  *  - pull/push bracket EVERY call, even pure SELECT (ducklakexl.py:387-397);
+  *    the pull reads the workbook only when its content identity moved
+  *    since this session last pulled or pushed it ([[graft.lake.CatalogSync]])
   *  - bootstrap: all catalog sheets present in the workbook -> adopt remote
   *    state (pull); else seed and push (ducklakexl.py:261-296)
   *  - multi-statement scripts run in order; the LAST select's DataFrame is
@@ -117,11 +119,13 @@ class DuckLakeXLSpark(
     */
   private var tempTables = Map.empty[String, DataFrame]
 
-  // what syncViews last reconciled against, and every temp view name the
-  // lake registered since (its own and the statements' metadata relations)
+  // what syncViews last reconciled against, the temp views it registered
+  // (TEMP tables, lake views), and the metadata relations statements built
+  // since (dropped when their commit bracket ends)
   private var syncedState: CatalogState = null
   private var syncedTemps: Map[String, DataFrame] = null
   private var syncedNames = Set.empty[String]
+  private var metaNames = Set.empty[String]
 
   initialize()
 
@@ -443,7 +447,10 @@ class DuckLakeXLSpark(
 
   // ------------------------------------------------------------ pull/push
 
-  /** adopt the workbook's catalog as this session's base */
+  /** adopt the workbook's catalog as this session's base. The workbook is
+    * read only when its content identity moved since this session last
+    * pulled or pushed it; otherwise the catalog already held is the base.
+    */
   def pull(): Unit = state = sync.pull()
 
   /** write the changed sheets, or refuse with a
@@ -460,14 +467,21 @@ class DuckLakeXLSpark(
   /** THE commit bracket every catalog write runs in (reference `sql`,
     * ducklakexl.py:387-397): pull a fresh base when the workbook exists,
     * run `body` on it, push the result. `body` must not `return`: a
-    * non-local return throws past the push and drops the commit.
+    * non-local return throws past the push and drops the commit. The
+    * metadata relations the body built are dropped when it ends: a
+    * DataFrame it returned is analyzed already, and the next statement
+    * builds its own from the catalog it runs on.
     */
-  private def withCatalogSync[A](body: => A): A = {
-    sync.pullIfPresent().foreach(state = _)
-    val out = try body finally syncViews()
-    push()
-    out
-  }
+  private def withCatalogSync[A](body: => A): A =
+    try {
+      sync.pullIfPresent().foreach(state = _)
+      val out = try body finally syncViews()
+      push()
+      out
+    } finally {
+      metaNames.foreach(spark.catalog.dropTempView)
+      metaNames = Set.empty
+    }
 
   // ------------------------------------------------------------ query API
   /** THE query path (reference `sql`, ducklakexl.py:387-397):
@@ -3055,7 +3069,8 @@ class DuckLakeXLSpark(
     * each commit bracket; a no-op unless `state` or `tempTables` is new.
     */
   private def syncViews(): Unit = if ((state ne syncedState) || (tempTables ne syncedTemps)) {
-    syncedNames.foreach(spark.catalog.dropTempView)
+    (syncedNames ++ metaNames).foreach(spark.catalog.dropTempView)
+    metaNames = Set.empty
     syncedNames = tempTables.keySet
     tempTables.foreach { case (n, df) => df.createOrReplaceTempView(n) }
     // SQL views in creation order (a later view may reference an earlier
@@ -3263,7 +3278,7 @@ class DuckLakeXLSpark(
       case n => metaTableDf(n, None).get // a bare name: full history
     }
     df.createOrReplaceTempView(name)
-    syncedNames += name
+    metaNames += name
     name
   }
 
@@ -3755,10 +3770,12 @@ class DuckLakeXLSpark(
       if (rows.length <= inlineRowLimit) {
         val snap = state.currentSnapshot + 1
         state = state.copy(
-          inlinedData = state.inlinedData ++ rows.map(r => InlinedDataRow(
-            t.tableId, snap, None,
-            schema.fields.indices.map(i =>
-              Option(r.get(i)).map(_.toString).getOrElse("")).toVector)),
+          inlinedData = state.inlinedData ++ rows.map { r =>
+            // NULL is a blank cell, and a pull keeps no trailing blank
+            val cells = schema.fields.indices.map(i =>
+              Option(r.get(i)).map(_.toString).getOrElse("")).toVector
+            InlinedDataRow(t.tableId, snap, None, cells.take(cells.lastIndexWhere(_.nonEmpty) + 1))
+          },
           tableStats = bumpStats(t.tableId, rows.length))
         newSnapshot(state.nextCatalogId, state.nextFileId)
         return
@@ -4173,7 +4190,7 @@ class DuckLakeXLSpark(
         },
         filePartitionValues = ns.filePartitionValues ++
           partVals.getOrElse(p.toString, Seq.empty).zipWithIndex.map { case (v, i) =>
-            FilePartitionValueRow(fid, t.tableId, i, v)
+            FilePartitionValueRow(fid, t.tableId, i, v.flatMap(CatalogState.optValue))
           })
       fid += 1
     }
@@ -4671,9 +4688,11 @@ class DuckLakeXLSpark(
       c.columnId -> ((None: Option[String], None: Option[String], 0L))).toMap
     paths.map { p =>
       byNorm.get(normUri(p)) match {
+        // a bound the workbook reads back as NULL ('', 'None', 'nan', …)
+        // is no bound here either: the writer's catalog equals a pull's
         case Some(r) => p -> ((r.getAs[Long]("cnt"), cols.map(c => c.columnId -> ((
-          Option(r.getAs[String](s"mn_${c.columnOrder}")),
-          Option(r.getAs[String](s"mx_${c.columnOrder}")),
+          Option(r.getAs[String](s"mn_${c.columnOrder}")).flatMap(CatalogState.optValue),
+          Option(r.getAs[String](s"mx_${c.columnOrder}")).flatMap(CatalogState.optValue),
           r.getAs[Long](s"nl_${c.columnOrder}")))).toMap))
         case None => p -> ((0L, emptyStats)) // zero-row part file
       }

@@ -18,7 +18,12 @@ import graft.xlsx.ExcelRemote
   *    CAS head probe still runs first, so a read-only statement still
   *    fails on, and is replayed after, a concurrent writer's commit,
   *    exactly like a write. `synced` is a state the caller holds anyway,
-  *    so it keeps no extra rows alive.
+  *    so it keeps no extra rows alive;
+  *  - `syncedId`: the workbook's content identity as `synced` was pulled
+  *    from or pushed to it. A pull whose identity probe returns that same
+  *    value returns `synced` without reading, parsing or digesting a sheet.
+  *    No identity, a different one, an absent workbook or a write that
+  *    threw each leave a full pull.
   */
 final class CatalogSync(remote: ExcelRemote) {
   @volatile private var digests: Map[String, String] = Map.empty
@@ -26,6 +31,8 @@ final class CatalogSync(remote: ExcelRemote) {
   @volatile private var base: Long = -1L
   /** null until the first pull/push, and again once the workbook is gone */
   @volatile private var synced: CatalogState = null
+  /** None while unknown: the next pull reads the workbook */
+  @volatile private var syncedId: Option[String] = None
 
   /** reference _initialize_ducklake (ducklakexl.py:232-299): every core
     * sheet present -> adopt the remote; else push `seed` as the catalog.
@@ -47,16 +54,26 @@ final class CatalogSync(remote: ExcelRemote) {
     */
   def pullIfPresent(): Option[CatalogState] =
     if (remote.exists) Some(pull())
-    else { digests = Map.empty; synced = null; None }
+    else { digests = Map.empty; synced = null; syncedId = None; None }
 
-  /** workbook -> CatalogState, which becomes the compare-and-set base */
+  /** workbook -> CatalogState, which becomes the compare-and-set base; the
+    * state last pulled or pushed itself while the workbook's identity is
+    * the one recorded with it. The identity is read before the sheets, so
+    * a file replaced in between costs one more pull, never a new identity
+    * on old rows.
+    */
   def pull(): CatalogState = {
-    val sheets = remote.readAll().map { case (n, rows) => XlsxSheet(n, rows) }
-    val st = CatalogState.fromSheets(sheets)
-    base = st.currentSnapshot
-    digests = sheets.map(s => s.name -> CatalogSync.digest(s.rows)).toMap
-    synced = st
-    st
+    val id = remote.storedIdentity()
+    if (id.isDefined && id == syncedId) synced
+    else {
+      val sheets = remote.readAll().map { case (n, rows) => XlsxSheet(n, rows) }
+      val st = CatalogState.fromSheets(sheets)
+      base = st.currentSnapshot
+      digests = sheets.map(s => s.name -> CatalogSync.digest(s.rows)).toMap
+      synced = st
+      syncedId = id
+      st
+    }
   }
 
   /** CatalogState -> workbook. One `readSheet` re-reads the remote's
@@ -81,7 +98,11 @@ final class CatalogSync(remote: ExcelRemote) {
       val sheets = state.toSheets.map(s => (s.name, s.rows))
       val now = sheets.map { case (n, rows) => n -> CatalogSync.digest(rows) }
       val dirty = now.collect { case (n, d) if !digests.get(n).contains(d) => n }.toSet
-      if (dirty.nonEmpty) remote.writeChanged(sheets, dirty)
+      if (dirty.nonEmpty) {
+        syncedId = None // stays unknown if the write throws
+        remote.writeChanged(sheets, dirty)
+        syncedId = remote.publishedIdentity
+      }
       digests = now.toMap
       synced = state
     }

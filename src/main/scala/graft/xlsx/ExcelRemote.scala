@@ -11,10 +11,15 @@ import com.fasterxml.jackson.databind.ObjectMapper
 
 /** The workbook transport abstraction (reference `_pick_client`,
   * ducklakexl.py:85-97): the catalog sync layer
-  * ([[graft.lake.CatalogSync]]) only needs these six operations, so
-  * local-file and Microsoft-Graph workbooks are interchangeable behind
-  * them — exactly how the reference treats its two modes (same
-  * pull/push, different IO: ducklakexl.py:424-456,527-536).
+  * ([[graft.lake.CatalogSync]]) only needs these six operations, plus two
+  * optional content identities, so local-file and Microsoft-Graph
+  * workbooks are interchangeable behind them — exactly how the reference
+  * treats its two modes (same pull/push, different IO:
+  * ducklakexl.py:424-456,527-536).
+  *
+  * The identities let the sync skip a pull when the workbook holds the
+  * very bytes it last pulled or pushed. Both default to None, "unknown":
+  * such a transport is pulled in full on every statement.
   */
 trait ExcelRemote {
   def exists: Boolean
@@ -42,10 +47,24 @@ trait ExcelRemote {
     */
   def writeChanged(sheets: Seq[XlsxCodec.Sheet], dirty: Set[String]): Unit =
     writeAll(sheets)
+
+  /** the identity of the workbook as stored now: equal values mean
+    * unchanged bytes; None when unknown or the workbook is absent
+    */
+  def storedIdentity(): Option[String] = None
+
+  /** the identity of the bytes this remote itself last published, as
+    * [[storedIdentity]] would read them back; None when unknown
+    */
+  def publishedIdentity: Option[String] = None
 }
 
-/** local .xlsx on the filesystem (reference "excel" client) */
+/** local .xlsx on the filesystem (reference "excel" client); its
+  * identity is [[XlsxCodec.contentIdentity]], read without decoding a part
+  */
 final class LocalXlsxRemote(path: String) extends ExcelRemote {
+  @volatile private var published: Option[String] = None
+
   def exists: Boolean = Files.exists(Paths.get(path))
   def sheetNames: Seq[String] = XlsxCodec.sheetNames(path)
   def readAll(): Seq[XlsxCodec.Sheet] = XlsxCodec.read(path)
@@ -53,7 +72,15 @@ final class LocalXlsxRemote(path: String) extends ExcelRemote {
   def readSheet(name: String): Option[Seq[Seq[String]]] =
     try XlsxCodec.readOne(path, name)
     catch { case _: NoSuchFileException => None }
-  def writeAll(sheets: Seq[XlsxCodec.Sheet]): Unit = XlsxCodec.write(path, sheets)
+  def writeAll(sheets: Seq[XlsxCodec.Sheet]): Unit =
+    published = Some(XlsxCodec.write(path, sheets))
+  /** None for an absent file or one that is not a readable zip: the full
+    * pull then finds out what it is
+    */
+  override def storedIdentity(): Option[String] =
+    try Some(XlsxCodec.contentIdentity(Paths.get(path)))
+    catch { case _: java.io.IOException => None }
+  override def publishedIdentity: Option[String] = published
 }
 
 /** OneDrive/SharePoint workbook over the Microsoft Graph REST API —

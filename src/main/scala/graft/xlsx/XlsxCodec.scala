@@ -42,6 +42,9 @@ import scala.util.Using
   * forced to disk, then ATOMIC_MOVE and a best-effort directory sync —
   * a free improvement for the local remote over the reference's
   * non-atomic full rewrite (README.md:28 caveats).
+  *
+  * [[contentIdentity]] names a workbook's bytes without decoding them; a
+  * write returns the identity of what it published.
   */
 object XlsxCodec {
 
@@ -273,7 +276,12 @@ object XlsxCodec {
     }
   }
 
-  def write(path: String, sheets: Seq[Sheet]): Unit = {
+  /** writes `sheets` to `path` and returns the [[contentIdentity]] of the
+    * published file, taken from the temp file before the rename: a rename
+    * keeps the inode and the mtime, while a read of `path` afterwards could
+    * already see another writer's file
+    */
+  def write(path: String, sheets: Seq[Sheet]): String = {
     require(sheets.nonEmpty, "xlsx needs at least one sheet")
     sheets.foreach { case (n, _) =>
       require(n.length <= 31, s"sheet name >31 chars: $n") // Excel cap
@@ -305,10 +313,35 @@ object XlsxCodec {
         // crash cannot leave an empty workbook under the lake's name
         ch.force(true)
       }
+      val published = contentIdentity(tmp)
       Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
         StandardCopyOption.ATOMIC_MOVE)
       syncDir(dir)
+      published
     } finally Files.deleteIfExists(tmp) // no-op after a successful move
+  }
+
+  /** The identity of the workbook bytes in `file`, read from the zip
+    * central directory without inflating a part: each entry's name, CRC-32
+    * and uncompressed size, plus the file's size, mtime and file key (the
+    * inode). Equal identities mean the same bytes in the same file; any
+    * rewrite, copy or `touch` gives a new one. Throws as opening the zip
+    * does (absent file, not a zip).
+    */
+  def contentIdentity(file: Path): String = {
+    val a = Files.readAttributes(file, classOf[java.nio.file.attribute.BasicFileAttributes])
+    val sb = new java.lang.StringBuilder(1024)
+    sb.append(a.size).append('|')
+      .append(a.lastModifiedTime.to(java.util.concurrent.TimeUnit.NANOSECONDS)).append('|')
+      .append(a.fileKey)
+    Using.resource(new ZipFile(file.toFile)) { zf =>
+      val it = zf.entries()
+      while (it.hasMoreElements) {
+        val e = it.nextElement()
+        sb.append('|').append(e.getName).append(':').append(e.getCrc).append(':').append(e.getSize)
+      }
+    }
+    sb.toString
   }
 
   /** makes a rename in `dir` durable; best effort, since not every

@@ -13,9 +13,21 @@ import graft.xlsx.{ExcelRemote, XlsxCodec}
   */
 class CatalogSyncSpec extends AnyFunSuite {
 
-  /** a workbook held in memory that logs every transport call */
+  /** a workbook held in memory that logs every transport call. Every
+    * change of `book`, its own writes and the spec's edits alike, gives
+    * it a new identity; a spec may also set `id` itself.
+    */
   private final class MemRemote extends ExcelRemote {
-    var book: Option[Seq[XlsxCodec.Sheet]] = None
+    private var stored: Option[Seq[XlsxCodec.Sheet]] = None
+    private var version = 0
+    var id: Option[String] = None
+    var failWrites = false
+    def book: Option[Seq[XlsxCodec.Sheet]] = stored
+    def book_=(b: Option[Seq[XlsxCodec.Sheet]]): Unit = {
+      stored = b
+      version += 1
+      id = Some(s"v$version")
+    }
     val calls = ArrayBuffer.empty[String]
     val writes = ArrayBuffer.empty[Set[String]]
     def count(op: String): Int = calls.count(_ == op)
@@ -30,12 +42,18 @@ class CatalogSyncSpec extends AnyFunSuite {
       writeChanged(sheets, sheets.map(_._1).toSet)
     override def writeChanged(sheets: Seq[XlsxCodec.Sheet], dirty: Set[String]): Unit = {
       calls += "write"
+      if (failWrites) throw new java.io.IOException("write failed")
       writes += dirty
       // a real workbook pads rows on write and drops trailing blanks on read
       book = Some(sheets.map { case (n, rows) =>
         val w = rows.map(_.length).maxOption.getOrElse(0)
         n -> rows.map(_.padTo(w, "")) })
     }
+    override def storedIdentity(): Option[String] = {
+      calls += "storedIdentity"
+      book.flatMap(_ => id)
+    }
+    override def publishedIdentity: Option[String] = id
   }
 
   private val seed = CatalogState.empty.copy(
@@ -206,5 +224,85 @@ class CatalogSyncSpec extends AnyFunSuite {
     sync.push(advanced(seed))
     assert(remote.writes.toSeq == Seq(seed.toSheets.map(_.name).toSet))
     assert(sync.pull().currentSnapshot == seed.currentSnapshot + 1)
+  }
+
+  test("an unchanged identity returns the state last pulled without a readAll") {
+    val (remote, _) = bootstrapped()
+    val sync = new CatalogSync(remote)
+    val first = sync.pull()
+    assert(remote.count("readAll") == 1, remote.calls)
+    remote.calls.clear()
+    assert(sync.pull() eq first)
+    assert(sync.pullIfPresent().exists(_ eq first))
+    assert(remote.count("readAll") == 0, remote.calls)
+    assert(remote.count("storedIdentity") == 2, remote.calls)
+  }
+
+  test("after its own push, the next pull makes no readAll and returns the pushed state") {
+    val (remote, sync) = bootstrapped()
+    val next = advanced(seed)
+    sync.push(next)
+    assert(remote.writes.size == 1)
+    remote.calls.clear()
+    assert(sync.pull() eq next)
+    assert(remote.count("readAll") == 0, remote.calls)
+    // and a push of it, as a read-only statement makes, still probes the head
+    sync.push(next)
+    assert(remote.calls.toSeq == Seq("storedIdentity", "readSheet"))
+  }
+
+  test("a foreign write, an unknown identity or an absent workbook forces a full pull") {
+    val (remote, sync) = bootstrapped()
+    sync.pull()
+    // a foreign write: another sync on the same workbook commits
+    new CatalogSync(remote).push(advanced(seed))
+    remote.calls.clear()
+    assert(sync.pull().currentSnapshot == seed.currentSnapshot + 1)
+    assert(remote.count("readAll") == 1, remote.calls)
+    // an unknown identity: every pull reads
+    remote.id = None
+    remote.calls.clear()
+    sync.pull(); sync.pull()
+    assert(remote.count("readAll") == 2, remote.calls)
+    // an absent workbook: the sync forgets the identity it recorded, so a
+    // workbook that reappears under that same identity is still read
+    remote.book = remote.book
+    sync.pull()
+    val (book, id) = (remote.book, remote.id)
+    remote.book = None
+    assert(sync.pullIfPresent().isEmpty)
+    remote.book = book
+    remote.id = id
+    remote.calls.clear()
+    sync.pull()
+    assert(remote.count("readAll") == 1, remote.calls)
+  }
+
+  test("a write that throws forces a full pull") {
+    val (remote, sync) = bootstrapped()
+    sync.pull()
+    remote.failWrites = true
+    intercept[java.io.IOException](sync.push(advanced(seed)))
+    remote.failWrites = false
+    remote.calls.clear()
+    assert(sync.pull().currentSnapshot == seed.currentSnapshot)
+    assert(remote.count("readAll") == 1, remote.calls)
+  }
+
+  test("the CAS rejection still fires on a session that reuses its pull") {
+    val (remote, b) = bootstrapped()
+    val base = b.pull()
+    remote.calls.clear()
+    assert(b.pull() eq base)
+    assert(remote.count("readAll") == 0, remote.calls)
+    new CatalogSync(remote).push(advanced(seed))
+    remote.writes.clear()
+    intercept[java.util.ConcurrentModificationException](b.push(base))
+    intercept[java.util.ConcurrentModificationException](
+      b.push(base.copy(metadata = base.metadata :+ ("owner" -> "b"))))
+    assert(remote.writes.isEmpty)
+    // the replay's pull reads the new head, and its commit lands
+    b.push(b.pull().copy(metadata = base.metadata :+ ("owner" -> "b")))
+    assert(remote.writes.size == 1)
   }
 }

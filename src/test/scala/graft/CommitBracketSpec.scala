@@ -12,13 +12,17 @@ import graft.xlsx.{ExcelRemote, LocalXlsxRemote, XlsxCodec}
 
 /** Every catalog-writing entry point runs in the one pull -> run -> push
   * bracket: one `readAll` for the pull, one `readSheet` for the CAS probe,
-  * and whatever the body committed reaches the workbook.
+  * and whatever the body committed reaches the workbook. A transport that
+  * reports the workbook's identity skips the `readAll` while the workbook
+  * holds what the session last pulled or pushed.
   */
 class CommitBracketSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
-  /** a local workbook that counts transport calls by name */
-  private final class Counting(path: String) extends ExcelRemote {
+  /** a local workbook that counts transport calls by name; it reports the
+    * workbook's identity only when `withIdentity`
+    */
+  private final class Counting(path: String, withIdentity: Boolean = false) extends ExcelRemote {
     private val inner = new LocalXlsxRemote(path)
     val calls = ArrayBuffer.empty[String]
     def count(op: String): Int = calls.count(_ == op)
@@ -29,6 +33,10 @@ class CommitBracketSpec extends AnyFunSuite {
       calls += "readSheet"; inner.readSheet(name)
     }
     def writeAll(sheets: Seq[XlsxCodec.Sheet]): Unit = { calls += "write"; inner.writeAll(sheets) }
+    override def storedIdentity(): Option[String] =
+      if (withIdentity) inner.storedIdentity() else None
+    override def publishedIdentity: Option[String] =
+      if (withIdentity) inner.publishedIdentity else None
   }
 
   private def freshDir(): String = Files.createTempDirectory("graft_bracket").toString
@@ -83,5 +91,37 @@ class CommitBracketSpec extends AnyFunSuite {
     // everything the entry points committed is in the workbook
     val reopened = new DuckLakeXLSpark(spark, s"$dir/lake.xlsx", s"$dir/data")
     assert(reopened.sql("SELECT count(*) AS c FROM t").head().getLong(0) == 8L)
+  }
+
+  test("an unchanged workbook is not read again; another writer's commit is") {
+    val dir = freshDir()
+    val xlsx = s"$dir/lake.xlsx"
+    val remote = new Counting(xlsx, withIdentity = true)
+    val lake = new DuckLakeXLSpark(spark, xlsx, s"$dir/data", remoteOverride = Some(remote))
+    lake.sql("CREATE TABLE t(id INTEGER)")
+    def count(): Long = lake.sql("SELECT count(*) FROM t").head().getLong(0)
+    // a read-only statement: the CAS probe is its one read, and it writes nothing
+    remote.calls.clear()
+    assert(count() == 0L)
+    assert(remote.count("readAll") == 0, remote.calls)
+    assert(remote.count("readSheet") == 1, remote.calls)
+    assert(remote.count("write") == 0, remote.calls)
+    // a write after the session's own write reads nothing either
+    lake.sql("INSERT INTO t VALUES (1)")
+    remote.calls.clear()
+    lake.sql("INSERT INTO t VALUES (2)")
+    assert(remote.count("readAll") == 0, remote.calls)
+    assert(remote.count("write") == 1, remote.calls)
+    remote.calls.clear()
+    assert(count() == 2L)
+    assert(remote.count("readAll") == 0, remote.calls)
+    // another lake instance commits: the next statement reads it, once
+    new DuckLakeXLSpark(spark, xlsx, s"$dir/data").sql("INSERT INTO t VALUES (3)")
+    remote.calls.clear()
+    assert(count() == 3L)
+    assert(remote.count("readAll") == 1, remote.calls)
+    remote.calls.clear()
+    assert(count() == 3L)
+    assert(remote.count("readAll") == 0, remote.calls)
   }
 }

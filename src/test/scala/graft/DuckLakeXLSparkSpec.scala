@@ -622,4 +622,20 @@ class DuckLakeXLSparkSpec extends AnyFunSuite {
     assert(lake.sql("SELECT c FROM md_v").head().getLong(0) ==
       lake.sql("SELECT count(*) AS c FROM ducklake_snapshot").head().getLong(0))
   }
+
+  test("a statement's metadata relations end with its sql() call; its DataFrame keeps them") {
+    val (lake, _, _) = freshLake()
+    lake.sql("CREATE TABLE ml(id INTEGER); INSERT INTO ml VALUES (1)")
+    val df = lake.sql("SELECT count(*) AS c FROM ducklake_data_file")
+    assert(!spark.catalog.tableExists("ducklake_data_file"))
+    assert(df.collect().map(_.getLong(0)).toSeq == Seq(1L))
+    // a lake view over a metadata relation reads in consecutive read-only
+    // calls, which reuse the catalog and so do not rebuild the view
+    lake.sql("CREATE VIEW ml_v AS SELECT max(snapshot_id) AS s FROM ducklake_snapshot")
+    val head = lake.currentState.currentSnapshot
+    for (_ <- 1 to 2) {
+      assert(lake.sql("SELECT s FROM ml_v").head().getLong(0) == head)
+      assert(!spark.catalog.tableExists("ducklake_snapshot"))
+    }
+  }
 }

@@ -360,4 +360,25 @@ class XlsxCodecSpec extends AnyFunSuite {
       XlsxCodec.write(p, Seq(("x" * 32, Seq(Seq("a")))))
     }
   }
+
+  test("a write returns the identity its file reads back; a touch or a rewrite moves it") {
+    val p = tmpXlsx()
+    val path = java.nio.file.Paths.get(p)
+    val sheets = Seq(("s", Seq(Seq("a", "b"), Seq("c"))))
+    val remote = new LocalXlsxRemote(p)
+    remote.writeAll(sheets)
+    val published = remote.publishedIdentity
+    assert(published.isDefined && remote.storedIdentity() == published)
+    assert(XlsxCodec.contentIdentity(path) == published.get)
+    Files.setLastModifiedTime(path, java.nio.file.attribute.FileTime.fromMillis(
+      Files.getLastModifiedTime(path).toMillis - 5000))
+    assert(remote.storedIdentity() != published)
+    val touched = remote.storedIdentity()
+    // the same cells written again are a new file: a new identity
+    assert(XlsxCodec.write(p, sheets) != touched.get)
+    Files.delete(path)
+    assert(remote.storedIdentity().isEmpty)
+    Files.write(path, "not a zip".getBytes(StandardCharsets.UTF_8))
+    assert(remote.storedIdentity().isEmpty)
+  }
 }

@@ -1,6 +1,10 @@
 package graft
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.zip.{ZipEntry, ZipFile, ZipOutputStream}
+
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -87,5 +91,40 @@ class XlsxForeignSpec extends AnyFunSuite {
     lake.sql("INSERT INTO crew VALUES (5, 'Eve', false, 0.5)")
     val again = new DuckLakeXLSpark(spark, s"$dir/lake.xlsx", s"$dir/data")
     assert(again.sql("SELECT count(*) AS c FROM crew").head().getLong(0) == 5L)
+  }
+
+  /** `src` re-zipped into `dst` part by part, `part` passed through `edit` */
+  private def rezip(src: Path, dst: Path, part: String)(edit: String => String): Unit = {
+    val zf = new ZipFile(src.toFile)
+    val out = new ZipOutputStream(Files.newOutputStream(dst))
+    try zf.entries().asScala.foreach { e =>
+      val bytes = zf.getInputStream(e).readAllBytes()
+      out.putNextEntry(new ZipEntry(e.getName))
+      out.write(if (e.getName == part) edit(new String(bytes, UTF_8)).getBytes(UTF_8) else bytes)
+      out.closeEntry()
+    } finally { out.close(); zf.close() }
+  }
+
+  test("an out-of-band edit of the workbook is seen by the next statement") {
+    val dir = Files.createTempDirectory("graft_foreign_edit")
+    val xlsx = dir.resolve("lake.xlsx")
+    Files.copy(Paths.get(fixture), xlsx)
+    val lake = new DuckLakeXLSpark(spark, xlsx.toString, dir.resolve("data").toString)
+    def name1(): String = lake.sql("SELECT name FROM crew WHERE id = 1").head().getString(0)
+    assert(name1() == "Ada")
+    assert(name1() == "Ada")
+    // one shared-string cell edited in place: the same file, its mtime set
+    // back, so only the part's CRC (and maybe the size) tells
+    val mtime = Files.getLastModifiedTime(xlsx)
+    val edited = dir.resolve("edited.xlsx")
+    rezip(xlsx, edited, "xl/sharedStrings.xml")(_.replace(">Ada<", ">Eve<"))
+    Files.write(xlsx, Files.readAllBytes(edited))
+    Files.setLastModifiedTime(xlsx, mtime)
+    assert(name1() == "Eve")
+    // a rewrite the way the codec publishes one: a new file renamed over it
+    XlsxCodec.write(xlsx.toString, XlsxCodec.read(xlsx.toString).map { case (n, rows) =>
+      n -> rows.map(_.map(c => if (c == "Eve") "Ivy" else c))
+    })
+    assert(name1() == "Ivy")
   }
 }

@@ -13,11 +13,13 @@ import graft.xlsx.{ExcelRemote, XlsxCodec}
   */
 class CatalogSyncSpec extends AnyFunSuite {
 
-  /** a workbook held in memory that logs every transport call. Every
-    * change of `book`, its own writes and the spec's edits alike, gives
-    * it a new identity; a spec may also set `id` itself.
+  /** a workbook held in memory that logs every transport call. Its
+    * identity is None, as on a transport without one, unless
+    * `withIdentity`; then every change of `book`, its own writes and the
+    * spec's edits alike, gives it a new one, and a spec may also set `id`
+    * itself.
     */
-  private final class MemRemote extends ExcelRemote {
+  private final class MemRemote(withIdentity: Boolean = false) extends ExcelRemote {
     private var stored: Option[Seq[XlsxCodec.Sheet]] = None
     private var version = 0
     var id: Option[String] = None
@@ -49,11 +51,10 @@ class CatalogSyncSpec extends AnyFunSuite {
         val w = rows.map(_.length).maxOption.getOrElse(0)
         n -> rows.map(_.padTo(w, "")) })
     }
-    override def storedIdentity(): Option[String] = {
-      calls += "storedIdentity"
-      book.flatMap(_ => id)
-    }
-    override def publishedIdentity: Option[String] = id
+    override def storedIdentity(): Option[String] =
+      if (!withIdentity) None
+      else { calls += "storedIdentity"; book.flatMap(_ => id) }
+    override def publishedIdentity: Option[String] = if (withIdentity) id else None
   }
 
   private val seed = CatalogState.empty.copy(
@@ -67,8 +68,8 @@ class CatalogSyncSpec extends AnyFunSuite {
     st.copy(snapshots = st.snapshots :+ head.copy(snapshotId = head.snapshotId + 1))
   }
 
-  private def bootstrapped(): (MemRemote, CatalogSync) = {
-    val remote = new MemRemote
+  private def bootstrapped(withIdentity: Boolean = false): (MemRemote, CatalogSync) = {
+    val remote = new MemRemote(withIdentity)
     val sync = new CatalogSync(remote)
     sync.bootstrap(seed)
     remote.calls.clear(); remote.writes.clear()
@@ -227,7 +228,7 @@ class CatalogSyncSpec extends AnyFunSuite {
   }
 
   test("an unchanged identity returns the state last pulled without a readAll") {
-    val (remote, _) = bootstrapped()
+    val (remote, _) = bootstrapped(withIdentity = true)
     val sync = new CatalogSync(remote)
     val first = sync.pull()
     assert(remote.count("readAll") == 1, remote.calls)
@@ -239,7 +240,7 @@ class CatalogSyncSpec extends AnyFunSuite {
   }
 
   test("after its own push, the next pull makes no readAll and returns the pushed state") {
-    val (remote, sync) = bootstrapped()
+    val (remote, sync) = bootstrapped(withIdentity = true)
     val next = advanced(seed)
     sync.push(next)
     assert(remote.writes.size == 1)
@@ -252,7 +253,7 @@ class CatalogSyncSpec extends AnyFunSuite {
   }
 
   test("a foreign write, an unknown identity or an absent workbook forces a full pull") {
-    val (remote, sync) = bootstrapped()
+    val (remote, sync) = bootstrapped(withIdentity = true)
     sync.pull()
     // a foreign write: another sync on the same workbook commits
     new CatalogSync(remote).push(advanced(seed))
@@ -279,7 +280,7 @@ class CatalogSyncSpec extends AnyFunSuite {
   }
 
   test("a write that throws forces a full pull") {
-    val (remote, sync) = bootstrapped()
+    val (remote, sync) = bootstrapped(withIdentity = true)
     sync.pull()
     remote.failWrites = true
     intercept[java.io.IOException](sync.push(advanced(seed)))
@@ -290,7 +291,7 @@ class CatalogSyncSpec extends AnyFunSuite {
   }
 
   test("the CAS rejection still fires on a session that reuses its pull") {
-    val (remote, b) = bootstrapped()
+    val (remote, b) = bootstrapped(withIdentity = true)
     val base = b.pull()
     remote.calls.clear()
     assert(b.pull() eq base)

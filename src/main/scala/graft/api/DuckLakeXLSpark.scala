@@ -120,12 +120,12 @@ class DuckLakeXLSpark(
   private var tempTables = Map.empty[String, DataFrame]
 
   // what syncViews last reconciled against, the temp views it registered
-  // (TEMP tables, lake views), and the metadata relations statements built
-  // since (dropped when their commit bracket ends)
+  // (TEMP tables, lake views), and the temp views statements registered
+  // since through `statementView` (dropped when their commit bracket ends)
   private var syncedState: CatalogState = null
   private var syncedTemps: Map[String, DataFrame] = null
   private var syncedNames = Set.empty[String]
-  private var metaNames = Set.empty[String]
+  private var statementViews = Set.empty[String]
 
   initialize()
 
@@ -468,9 +468,9 @@ class DuckLakeXLSpark(
     * ducklakexl.py:387-397): pull a fresh base when the workbook exists,
     * run `body` on it, push the result. `body` must not `return`: a
     * non-local return throws past the push and drops the commit. The
-    * metadata relations the body built are dropped when it ends: a
-    * DataFrame it returned is analyzed already, and the next statement
-    * builds its own from the catalog it runs on.
+    * temp views the body registered through [[statementView]] are
+    * dropped when it ends: a DataFrame it returned is analyzed already,
+    * and the next statement registers its own.
     */
   private def withCatalogSync[A](body: => A): A =
     try {
@@ -479,8 +479,8 @@ class DuckLakeXLSpark(
       push()
       out
     } finally {
-      metaNames.foreach(spark.catalog.dropTempView)
-      metaNames = Set.empty
+      statementViews.foreach(spark.catalog.dropTempView)
+      statementViews = Set.empty
     }
 
   // ------------------------------------------------------------ query API
@@ -1074,38 +1074,6 @@ class DuckLakeXLSpark(
   // bare travel pins a snapshot temp view via [[tableAt]] instead.
   import DuckLakeXLSpark._
 
-  /** apply `f` to the parts of `s` outside single-quoted literals and
-    * double-quoted identifiers — a table literally named `"main.t"` must
-    * survive the qualifier strip untouched
-    */
-  private[graft] def mapOutsideQuotes(s: String)(f: String => String): String = {
-    val out = new StringBuilder
-    val cur = new StringBuilder
-    var i = 0
-    var inS = false
-    var inD = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (!inS && !inD && (c == '\'' || c == '"')) {
-        out.append(f(cur.toString)); cur.clear()
-        if (c == '\'') inS = true else inD = true
-        out.append(c)
-      } else if (inS) {
-        out.append(c)
-        if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') { out.append('\''); i += 1 }
-          else inS = false
-        }
-      } else if (inD) {
-        out.append(c)
-        if (c == '"') inD = false
-      } else cur.append(c)
-      i += 1
-    }
-    out.append(f(cur.toString))
-    out.toString
-  }
-
   /** DML expression fragments (DELETE WHERE, UPDATE SET, MERGE ON/SET,
     * INSERT VALUES bodies) are user DuckDB SQL like any SELECT — they
     * MUST ride the dialect rewrites before `expr()`: a raw `tags[1]` in a
@@ -1170,7 +1138,7 @@ class DuckLakeXLSpark(
     // identifier-substitute the CTE name (word-bounded, not after a dot,
     // outside string literals) — a unique view name cannot shadow a lake
     // table for later statements the way reusing the CTE name would
-    def subst(s: String): String = mapOutsideQuotes(s)(
+    def subst(s: String): String = StatementRouter.mapOutsideLiterals(s)(
       _.replaceAll("(?i)(?<![\\w.\"])" +
         java.util.regex.Pattern.quote(name) + "\\b", viewName))
     def shape(df: DataFrame, like: Option[DataFrame]): DataFrame = {
@@ -1199,13 +1167,13 @@ class DuckLakeXLSpark(
         s"WITH RECURSIVE '$name' did not converge within $cap iterations " +
         "(UNION-distinct recursion only terminates when the step stops " +
         "producing new rows)")
-      frontier.createOrReplaceTempView(viewName)
+      statementView(viewName, frontier)
       val next = shape(sqlSelect((subst(step))).distinct(), Some(acc))
         .except(acc).localCheckpoint()
       if (!next.isEmpty) acc = acc.unionAll(next).localCheckpoint()
       frontier = next
     }
-    acc.createOrReplaceTempView(viewName)
+    statementView(viewName, acc)
     val rest0 = q0.substring(close + 1).trim
     val rest =
       if (rest0.startsWith(","))
@@ -1518,7 +1486,7 @@ class DuckLakeXLSpark(
     // the remaining query text for the passes below
     val q00r = rewriteRecursiveUnion(q00)
     // direct file queries first — their paths sit inside quotes, which
-    // every later stage (mapOutsideQuotes, the dialect layer) skips.
+    // every later stage (mapOutsideLiterals, the dialect layer) skips.
     // The dedup cache is PER STATEMENT (a path referenced twice in one
     // query shares a view; across statements the path re-reads, like
     // DuckDB — a longer-lived cache would freeze the first file listing)
@@ -1545,20 +1513,17 @@ class DuckLakeXLSpark(
       if (name.contains('.')) s"$name TIMESTAMP AS OF '$ts'"
       else {
         val id = snapshotIdAt(ts)
-        val vn = s"${name}__v$id"
-        tableAt(name, id).createOrReplaceTempView(vn)
-        vn
+        statementView(s"${name}__v$id", tableAt(name, id))
       }
     var q = TimestampAtRe.replaceAllIn(q0v,
       m => java.util.regex.Matcher.quoteReplacement(travelTs(m.group(1), m.group(2))))
     q = TimestampAsOfRe.replaceAllIn(q,
       m => java.util.regex.Matcher.quoteReplacement(travelTs(m.group(1), m.group(2))))
-    q = mapOutsideQuotes(q) { seg =>
+    q = StatementRouter.mapOutsideLiterals(q) { seg =>
       var s = seg
       def travel(name: String, ver: String): String =
         if (name.contains('.')) s"$name VERSION AS OF $ver"
         else {
-          val vn = s"${name}__v$ver"
           // meta-catalog time travel (r16): `ducklake_table AT
           // (VERSION => n)` answers catalog rows as of n — unless a
           // user table shadows the metadata name
@@ -1566,15 +1531,12 @@ class DuckLakeXLSpark(
             if (state.tableByName(name).isEmpty)
               metaTableDf(name, Some(ver.toLong)).getOrElse(tableAt(name, ver.toLong))
             else tableAt(name, ver.toLong)
-          df.createOrReplaceTempView(vn)
-          vn
+          statementView(s"${name}__v$ver", df)
         }
       s = VersionAtRe.replaceAllIn(s, m => travel(m.group(1), m.group(2)))
       s = VersionAsOfRe.replaceAllIn(s, m => travel(m.group(1), m.group(2)))
       // `FROM snapshots()` — the reference's snapshot-history table function
-      s = SnapshotsRe.replaceAllIn(s, { _ =>
-        snapshots().createOrReplaceTempView("__snapshots"); "__snapshots"
-      })
+      s = SnapshotsRe.replaceAllIn(s, _ => statementView("__snapshots", snapshots()))
       s = InfoSchemaRe.replaceAllIn(s,
         m => registerMetaView("__info_" + m.group(1).toLowerCase))
       // DuckDB's own metadata table functions — the habitual spellings a
@@ -1634,11 +1596,9 @@ class DuckLakeXLSpark(
         if (u.getScheme == null || u.getScheme == "file") u.getPath
         else fp.toString
       }.sorted
-    val vn = s"__glob_${java.lang.Integer.toHexString(pattern.hashCode)}"
-    spark.createDataFrame(files.map(Row(_)).asJava,
-      StructType(Seq(StructField("file", StringType, nullable = false))))
-      .createOrReplaceTempView(vn)
-    vn
+    statementView(s"__glob_${java.lang.Integer.toHexString(pattern.hashCode)}",
+      spark.createDataFrame(files.map(Row(_)).asJava,
+        StructType(Seq(StructField("file", StringType, nullable = false)))))
   }
 
   private def registerFileRead(fmt: String, paths: Seq[String],
@@ -1656,10 +1616,8 @@ class DuckLakeXLSpark(
       // the same name, so an overwrite is a benign refresh, never a
       // wrong-table read
       val key = s"$fmt|${paths.mkString("|")}|${opts.toSeq.sorted.mkString(",")}"
-      val vn = "__file_" + java.security.MessageDigest.getInstance("MD5")
-        .digest(key.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      df.createOrReplaceTempView(vn)
-      vn
+      statementView("__file_" + java.security.MessageDigest.getInstance("MD5")
+        .digest(key.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString, df)
   }
 
   // ---- read_csv/read_json option depth (r17 reader-option barrage) ----
@@ -2106,8 +2064,7 @@ class DuckLakeXLSpark(
     // JVM-global sequence: per-instance counters collide when two lake
     // instances share one SparkSession (session-scoped temp views) —
     // the same hazard fixed for __file_ names
-    val vn = s"__byname_${DuckLakeXLSpark.fileViewSeq.incrementAndGet()}"
-    df.createOrReplaceTempView(vn)
+    val vn = statementView(s"__byname_${DuckLakeXLSpark.fileViewSeq.incrementAndGet()}", df)
     s"SELECT * FROM $vn$tail"
   }
 
@@ -2137,8 +2094,8 @@ class DuckLakeXLSpark(
             s"cannot parse POSITIONAL JOIN operands in: $q")
           val joined = zipPositional(
             spark.sql(s"SELECT * FROM $lSrc"), spark.sql(s"SELECT * FROM $rSrc"))
-          val vn = s"__posjoin_${DuckLakeXLSpark.fileViewSeq.incrementAndGet()}"
-          joined.createOrReplaceTempView(vn)
+          val vn = statementView(
+            s"__posjoin_${DuckLakeXLSpark.fileViewSeq.incrementAndGet()}", joined)
           q = q.substring(0, lStart) + " " + vn + " " + q.substring(rEnd)
       }
     }
@@ -3069,8 +3026,8 @@ class DuckLakeXLSpark(
     * each commit bracket; a no-op unless `state` or `tempTables` is new.
     */
   private def syncViews(): Unit = if ((state ne syncedState) || (tempTables ne syncedTemps)) {
-    (syncedNames ++ metaNames).foreach(spark.catalog.dropTempView)
-    metaNames = Set.empty
+    (syncedNames ++ statementViews).foreach(spark.catalog.dropTempView)
+    statementViews = Set.empty
     syncedNames = tempTables.keySet
     tempTables.foreach { case (n, df) => df.createOrReplaceTempView(n) }
     // SQL views in creation order (a later view may reference an earlier
@@ -3277,8 +3234,16 @@ class DuckLakeXLSpark(
           StructField("is_nullable", BooleanType, false))))
       case n => metaTableDf(n, None).get // a bare name: full history
     }
+    statementView(name, df)
+  }
+
+  /** register `df` as the temp view `name` for the running statement and
+    * return `name`; the view is dropped when the commit bracket ends
+    * (or at the next [[syncViews]] that reconciles a new catalog)
+    */
+  private def statementView(name: String, df: DataFrame): String = {
     df.createOrReplaceTempView(name)
-    metaNames += name
+    statementViews += name
     name
   }
 
@@ -3767,13 +3732,17 @@ class DuckLakeXLSpark(
     })
     if (inlineRowLimit > 0 && partCols.isEmpty && isLocalValues && inlinable) {
       val rows = df.collect()
-      if (rows.length <= inlineRowLimit) {
+      val values = rows.map(r => schema.fields.indices.map(i => Option(r.get(i)).map(_.toString)))
+      // an inlined cell reads back through CatalogState.optValue, which
+      // takes '', blanks, None, nan, <NA> and NaT for NULL: a row holding
+      // such a value is written to a data file instead
+      val readsBack = values.forall(_.forall(_.forall(v => CatalogState.optValue(v).contains(v))))
+      if (rows.length <= inlineRowLimit && readsBack) {
         val snap = state.currentSnapshot + 1
         state = state.copy(
-          inlinedData = state.inlinedData ++ rows.map { r =>
+          inlinedData = state.inlinedData ++ values.map { vs =>
             // NULL is a blank cell, and a pull keeps no trailing blank
-            val cells = schema.fields.indices.map(i =>
-              Option(r.get(i)).map(_.toString).getOrElse("")).toVector
+            val cells = vs.map(_.getOrElse("")).toVector
             InlinedDataRow(t.tableId, snap, None, cells.take(cells.lastIndexWhere(_.nonEmpty) + 1))
           },
           tableStats = bumpStats(t.tableId, rows.length))
@@ -4126,9 +4095,9 @@ class DuckLakeXLSpark(
         // DuckDB references the target's current row) -> the target alias
         val bare = s.table.split('.').last
         Some(sets.map { case (c, e) =>
-          val e1 = mapOutsideQuotes(e)(
+          val e1 = StatementRouter.mapOutsideLiterals(e)(
             _.replaceAll("(?i)\\bEXCLUDED\\s*\\.", "src."))
-          (c, mapOutsideQuotes(e1)(_.replaceAll(
+          (c, StatementRouter.mapOutsideLiterals(e1)(_.replaceAll(
             "(?i)\\b" + java.util.regex.Pattern.quote(bare) + "\\s*\\.", "t.")))
         })
       case StatementRouter.ConflictReplace =>

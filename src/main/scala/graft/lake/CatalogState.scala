@@ -55,6 +55,11 @@ object CatalogSchema {
 
   def sheetName(table: String): String = table.stripPrefix("ducklake_").take(31)
 
+  private val headers: Map[String, Seq[String]] = tables.toMap
+
+  /** the header row of the known metadata table `table` */
+  def header(table: String): Seq[String] = headers(table)
+
   /** every sheet name the state interprets; anything else round-trips inert */
   val knownSheetNames: Set[String] = tables.map { case (t, _) => sheetName(t) }.toSet
 
@@ -631,104 +636,81 @@ final case class CatalogState(
     * empty cell (coercion table SURVEY.md §1.3)
     */
   def toSheets: Seq[XlsxSheet] = {
-    import CatalogSchema.sheetName
+    // each known sheet's header is its CatalogSchema.tables entry
+    def sheet(table: String, rows: Seq[Seq[String]]): XlsxSheet =
+      XlsxSheet(CatalogSchema.sheetName(table), CatalogSchema.header(table) +: rows)
     Seq(
-      XlsxSheet(sheetName("ducklake_metadata"),
-        Seq("key", "value") +: metadata.map(kv => Seq(kv._1, kv._2))),
-      XlsxSheet(sheetName("ducklake_snapshot"),
-        Seq("snapshot_id", "snapshot_time", "schema_version", "next_catalog_id", "next_file_id") +:
-          snapshots.map(s => Seq(s.snapshotId.toString, s.snapshotTime,
-            s.schemaVersion.toString, s.nextCatalogId.toString, s.nextFileId.toString))),
-      XlsxSheet(sheetName("ducklake_snapshot_changes"),
-        Seq("snapshot_id", "changes_made") +:
-          snapshotChanges.map(c => Seq(c.snapshotId.toString, c.changesMade))),
-      XlsxSheet(sheetName("ducklake_schema"),
-        Seq("schema_id", "schema_uuid", "begin_snapshot", "end_snapshot", "schema_name") +:
-          schemas.map(s => Seq(s.schemaId.toString, s.schemaUuid,
-            s.beginSnapshot.toString, optS(s.endSnapshot), s.schemaName))),
-      XlsxSheet(sheetName("ducklake_table"),
-        Seq("table_id", "table_uuid", "begin_snapshot", "end_snapshot", "schema_id", "table_name") +:
-          tables.map(t => Seq(t.tableId.toString, t.tableUuid, t.beginSnapshot.toString,
-            optS(t.endSnapshot), t.schemaId.toString, t.tableName))),
-      XlsxSheet(sheetName("ducklake_view"),
-        Seq("view_id", "view_uuid", "begin_snapshot", "end_snapshot", "schema_id", "view_name", "sql") +:
-          views.map(v => Seq(v.viewId.toString, v.viewUuid, v.beginSnapshot.toString,
-            optS(v.endSnapshot), v.schemaId.toString, v.viewName, v.sql))),
-      XlsxSheet(sheetName("ducklake_column"),
-        // DuckLake v0.1 stores column defaults IN ducklake_column
-        // (initial_default / default_value); internally they version as
-        // column tags (ALTER SET DEFAULT ends one tag and begins the
-        // next), so the sheet renders the ALIVE tag per column — a real
-        // DuckLake reader of this workbook sees the current defaults
-        Seq("column_id", "begin_snapshot", "end_snapshot", "table_id", "column_order",
-          "column_name", "column_type", "nulls_allowed", "initial_default",
-          "default_value") +:
-          columns.map { c =>
-            def aliveTag(key: String): String =
-              columnTags.filter(t => t.tableId == c.tableId &&
-                  t.columnId == c.columnId && t.key == key && t.endSnapshot.isEmpty)
-                .sortBy(_.beginSnapshot).lastOption.map(_.value).getOrElse("")
-            Seq(c.columnId.toString, c.beginSnapshot.toString,
-              optS(c.endSnapshot), c.tableId.toString, c.columnOrder.toString,
-              c.columnName, c.columnType, c.nullsAllowed.toString,
-              aliveTag("initial_default"), aliveTag("default"))
-          }),
-      XlsxSheet(sheetName("ducklake_partition_info"),
-        Seq("partition_id", "table_id", "begin_snapshot", "end_snapshot") +:
-          partitionInfo.map(p => Seq(p.partitionId.toString, p.tableId.toString,
-            p.beginSnapshot.toString, optS(p.endSnapshot)))),
-      XlsxSheet(sheetName("ducklake_partition_column"),
-        Seq("partition_id", "table_id", "partition_key_index", "column_id") +:
-          partitionColumns.map(p => Seq(p.partitionId.toString, p.tableId.toString,
-            p.partitionKeyIndex.toString, p.columnId.toString))),
-      XlsxSheet(sheetName("ducklake_data_file"),
-        Seq("data_file_id", "table_id", "begin_snapshot", "end_snapshot", "path",
-          "record_count", "file_size_bytes", "mapping_id") +:
-          dataFiles.map(f => Seq(f.dataFileId.toString, f.tableId.toString,
-            f.beginSnapshot.toString, optS(f.endSnapshot), f.path,
-            f.recordCount.toString, f.fileSizeBytes.toString, optS(f.mappingId)))),
-      XlsxSheet(sheetName("ducklake_column_mapping"),
-        Seq("mapping_id", "table_id", "type") +:
-          columnMappings.map(m => Seq(m.mappingId.toString, m.tableId.toString,
-            m.mapType))),
-      XlsxSheet(sheetName("ducklake_name_mapping"),
-        Seq("mapping_id", "column_id", "source_name", "target_name", "hive_partition") +:
-          nameMappings.map(m => Seq(m.mappingId.toString, m.columnId.toString,
-            m.sourceName, m.targetName, m.hivePartition.toString))),
-      XlsxSheet(sheetName("ducklake_file_partition_value"),
-        Seq("data_file_id", "table_id", "partition_key_index", "partition_value") +:
-          filePartitionValues.map(p => Seq(p.dataFileId.toString, p.tableId.toString,
-            p.partitionKeyIndex.toString, p.partitionValue.getOrElse("")))),
-      XlsxSheet(sheetName("ducklake_delete_file"),
-        Seq("delete_file_id", "table_id", "begin_snapshot", "end_snapshot",
-          "data_file_id", "path", "delete_count") +:
-          deleteFiles.map(f => Seq(f.deleteFileId.toString, f.tableId.toString,
-            f.beginSnapshot.toString, optS(f.endSnapshot), f.dataFileId.toString,
-            f.path, f.deleteCount.toString))),
-      XlsxSheet(sheetName("ducklake_table_stats"),
-        Seq("table_id", "record_count") +:
-          tableStats.map(t => Seq(t.tableId.toString, t.recordCount.toString))),
-      XlsxSheet(sheetName("ducklake_files_scheduled_for_deletion"),
-        Seq("data_file_id", "table_id", "path", "schedule_start") +:
-          scheduledDeletes.map(s => Seq(s.dataFileId.toString, s.tableId.toString,
-            s.path, s.scheduleStart))),
-      XlsxSheet(sheetName("ducklake_inlined_data_tables"),
-        Seq("table_id", "sheet_name") +:
-          inlinedData.map(_.tableId).distinct.sorted.map(id =>
-            Seq(id.toString, CatalogState.inlineSheetName(id)))),
-      XlsxSheet(sheetName("ducklake_tag"),
-        Seq("object_id", "begin_snapshot", "end_snapshot", "key", "value") +:
-          tags.map(t => Seq(t.objectId.toString, t.beginSnapshot.toString,
-            optS(t.endSnapshot), t.key, t.value))),
-      XlsxSheet(sheetName("ducklake_column_tag"),
-        Seq("table_id", "column_id", "begin_snapshot", "end_snapshot", "key", "value") +:
-          columnTags.map(t => Seq(t.tableId.toString, t.columnId.toString,
-            t.beginSnapshot.toString, optS(t.endSnapshot), t.key, t.value))),
-      XlsxSheet(sheetName("ducklake_file_column_statistics"),
-        Seq("data_file_id", "table_id", "column_id", "min_value", "max_value", "null_count") +:
-          fileColumnStats.map(f => Seq(f.dataFileId.toString, f.tableId.toString,
-            f.columnId.toString, f.minValue.getOrElse(""), f.maxValue.getOrElse(""),
-            f.nullCount.toString)))
+      sheet("ducklake_metadata", metadata.map(kv => Seq(kv._1, kv._2))),
+      sheet("ducklake_snapshot",
+        snapshots.map(s => Seq(s.snapshotId.toString, s.snapshotTime,
+          s.schemaVersion.toString, s.nextCatalogId.toString, s.nextFileId.toString))),
+      sheet("ducklake_snapshot_changes",
+        snapshotChanges.map(c => Seq(c.snapshotId.toString, c.changesMade))),
+      sheet("ducklake_schema",
+        schemas.map(s => Seq(s.schemaId.toString, s.schemaUuid,
+          s.beginSnapshot.toString, optS(s.endSnapshot), s.schemaName))),
+      sheet("ducklake_table",
+        tables.map(t => Seq(t.tableId.toString, t.tableUuid, t.beginSnapshot.toString,
+          optS(t.endSnapshot), t.schemaId.toString, t.tableName))),
+      sheet("ducklake_view",
+        views.map(v => Seq(v.viewId.toString, v.viewUuid, v.beginSnapshot.toString,
+          optS(v.endSnapshot), v.schemaId.toString, v.viewName, v.sql))),
+      // DuckLake v0.1 stores column defaults IN ducklake_column
+      // (initial_default / default_value); internally they version as
+      // column tags (ALTER SET DEFAULT ends one tag and begins the
+      // next), so the sheet renders the ALIVE tag per column — a real
+      // DuckLake reader of this workbook sees the current defaults
+      sheet("ducklake_column",
+        columns.map { c =>
+          def aliveTag(key: String): String =
+            columnTags.filter(t => t.tableId == c.tableId &&
+                t.columnId == c.columnId && t.key == key && t.endSnapshot.isEmpty)
+              .sortBy(_.beginSnapshot).lastOption.map(_.value).getOrElse("")
+          Seq(c.columnId.toString, c.beginSnapshot.toString,
+            optS(c.endSnapshot), c.tableId.toString, c.columnOrder.toString,
+            c.columnName, c.columnType, c.nullsAllowed.toString,
+            aliveTag("initial_default"), aliveTag("default"))
+        }),
+      sheet("ducklake_partition_info",
+        partitionInfo.map(p => Seq(p.partitionId.toString, p.tableId.toString,
+          p.beginSnapshot.toString, optS(p.endSnapshot)))),
+      sheet("ducklake_partition_column",
+        partitionColumns.map(p => Seq(p.partitionId.toString, p.tableId.toString,
+          p.partitionKeyIndex.toString, p.columnId.toString))),
+      sheet("ducklake_data_file",
+        dataFiles.map(f => Seq(f.dataFileId.toString, f.tableId.toString,
+          f.beginSnapshot.toString, optS(f.endSnapshot), f.path,
+          f.recordCount.toString, f.fileSizeBytes.toString, optS(f.mappingId)))),
+      sheet("ducklake_column_mapping",
+        columnMappings.map(m => Seq(m.mappingId.toString, m.tableId.toString, m.mapType))),
+      sheet("ducklake_name_mapping",
+        nameMappings.map(m => Seq(m.mappingId.toString, m.columnId.toString,
+          m.sourceName, m.targetName, m.hivePartition.toString))),
+      sheet("ducklake_file_partition_value",
+        filePartitionValues.map(p => Seq(p.dataFileId.toString, p.tableId.toString,
+          p.partitionKeyIndex.toString, p.partitionValue.getOrElse("")))),
+      sheet("ducklake_delete_file",
+        deleteFiles.map(f => Seq(f.deleteFileId.toString, f.tableId.toString,
+          f.beginSnapshot.toString, optS(f.endSnapshot), f.dataFileId.toString,
+          f.path, f.deleteCount.toString))),
+      sheet("ducklake_table_stats",
+        tableStats.map(t => Seq(t.tableId.toString, t.recordCount.toString))),
+      sheet("ducklake_files_scheduled_for_deletion",
+        scheduledDeletes.map(s => Seq(s.dataFileId.toString, s.tableId.toString,
+          s.path, s.scheduleStart))),
+      sheet("ducklake_inlined_data_tables",
+        inlinedData.map(_.tableId).distinct.sorted.map(id =>
+          Seq(id.toString, CatalogState.inlineSheetName(id)))),
+      sheet("ducklake_tag",
+        tags.map(t => Seq(t.objectId.toString, t.beginSnapshot.toString,
+          optS(t.endSnapshot), t.key, t.value))),
+      sheet("ducklake_column_tag",
+        columnTags.map(t => Seq(t.tableId.toString, t.columnId.toString,
+          t.beginSnapshot.toString, optS(t.endSnapshot), t.key, t.value))),
+      sheet("ducklake_file_column_statistics",
+        fileColumnStats.map(f => Seq(f.dataFileId.toString, f.tableId.toString,
+          f.columnId.toString, f.minValue.getOrElse(""), f.maxValue.getOrElse(""),
+          f.nullCount.toString)))
     ) ++ inlineDataSheets ++ extraSheets
   }
 

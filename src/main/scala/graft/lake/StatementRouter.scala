@@ -8,6 +8,16 @@ import scala.collection.mutable
   * DELETE+INSERT+SELECT in one string). `spark.sql` is single-statement,
   * so we split (respecting quotes and comments) and classify each
   * statement for the router in DuckLakeXLSpark.
+  *
+  * One quote rule holds for the whole dialect layer. [[split]] alone
+  * sees comments: it strips `--` and block comments while it cuts the
+  * script at top-level `;`. Every scanner after it reads quote state from
+  * one state machine, [[quoteKinds]] (or [[literalMask]], derived from
+  * it), and keeps only its own depth and keyword logic. The rule is
+  * DuckDB's: `'…'` is a string literal in which `''` is an escaped quote
+  * and a backslash is an ordinary character; `"…"` is a quoted
+  * identifier; both spans include their quotes, and an unterminated span
+  * runs to the end of the text.
   */
 object StatementRouter {
 
@@ -53,6 +63,85 @@ object StatementRouter {
     }
     out += cur.toString
     out.map(_.trim).filter(_.nonEmpty).toSeq
+  }
+
+  /** [[quoteKinds]] values: outside quotes, inside a `'…'` string
+    * literal, inside a `"…"` quoted identifier
+    */
+  private[graft] final val Unquoted: Byte = 0
+  private[graft] final val InString: Byte = 1
+  private[graft] final val InIdent: Byte = 2
+
+  /** the one quote state machine after [[split]]: the quote kind of each
+    * char of `s` (the object scaladoc states the rule)
+    */
+  private[graft] def quoteKinds(s: String): Array[Byte] = {
+    val k = new Array[Byte](s.length)
+    var state = Unquoted
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (state == Unquoted) {
+        if (c == '\'') state = InString else if (c == '"') state = InIdent
+        k(i) = state
+      } else {
+        k(i) = state
+        if (state == InString && c == '\'') {
+          if (i + 1 < s.length && s.charAt(i + 1) == '\'') { k(i + 1) = state; i += 1 }
+          else state = Unquoted
+        } else if (state == InIdent && c == '"') state = Unquoted
+      }
+      i += 1
+    }
+    k
+  }
+
+  /** true at each position of `s` inside a literal or quoted identifier;
+    * compute it once per string and pass it down
+    */
+  private[graft] def literalMask(s: String): Array[Boolean] = {
+    val k = quoteKinds(s)
+    val m = new Array[Boolean](k.length)
+    var i = 0
+    while (i < k.length) { m(i) = k(i) != Unquoted; i += 1 }
+    m
+  }
+
+  /** apply `f` to each run of `s` outside literals and quoted
+    * identifiers: rewrite regexes never touch string contents or a name
+    * like `"main.t"`
+    */
+  private[graft] def mapOutsideLiterals(s: String)(f: String => String): String = {
+    val lit = literalMask(s)
+    val out = new java.lang.StringBuilder(s.length + 16)
+    var i = 0
+    while (i < s.length) {
+      var j = i
+      while (j < s.length && lit(j) == lit(i)) j += 1
+      if (lit(i)) out.append(s, i, j) else out.append(f(s.substring(i, j)))
+      i = j
+    }
+    out.toString
+  }
+
+  private def isWordChar(c: Char) = Character.isLetterOrDigit(c) || c == '_'
+
+  /** index of the `close` char that balances the `open` char at `at`,
+    * counting only chars outside `lit`; -1 when there is none
+    */
+  private def matchingClose(s: String, at: Int, open: Char, close: Char,
+                            lit: Array[Boolean]): Int = {
+    var i = at
+    var depth = 0
+    while (i < s.length) {
+      if (!lit(i)) {
+        val c = s.charAt(i)
+        if (c == open) depth += 1
+        else if (c == close) { depth -= 1; if (depth == 0) return i }
+      }
+      i += 1
+    }
+    -1
   }
 
   sealed trait Stmt
@@ -430,23 +519,12 @@ object StatementRouter {
     * not split inside the literal)
     */
   private[graft] def splitTopLevelKeyword(s: String, kw: String): (String, Option[String]) = {
+    val lit = literalMask(s)
     var i = 0
     var depth = 0
-    var inS = false
-    var inD = false
     val n = s.length
-    def isWordChar(c: Char) = Character.isLetterOrDigit(c) || c == '_'
     while (i < n) {
-      val c = s.charAt(i)
-      if (inS) {
-        if (c == '\'') {
-          if (i + 1 < n && s.charAt(i + 1) == '\'') i += 1 else inS = false
-        }
-      } else if (inD) {
-        if (c == '"') inD = false
-      } else c match {
-        case '\'' => inS = true
-        case '"'  => inD = true
+      if (!lit(i)) s.charAt(i) match {
         case '('  => depth += 1
         case ')'  => depth -= 1
         case _ =>
@@ -472,22 +550,12 @@ object StatementRouter {
     * (`WHEN MATCHED` / `WHEN NOT MATCHED`); the tail keeps the text
     * AFTER the WHEN word so the clause regexes see `MATCHED …`
     */
-  private def splitMergeWhen(s: String): (String, Option[String]) = {
+  private[graft] def splitMergeWhen(s: String): (String, Option[String]) = {
+    val lit = literalMask(s)
     var i = 0
     var depth = 0
-    var inS = false
-    var inD = false
-    def isWordChar(c: Char) = Character.isLetterOrDigit(c) || c == '_'
     while (i < s.length) {
-      val c = s.charAt(i)
-      if (inS) {
-        if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') i += 1 else inS = false
-        }
-      } else if (inD) { if (c == '"') inD = false }
-      else c match {
-        case '\'' => inS = true
-        case '"'  => inD = true
+      if (!lit(i)) s.charAt(i) match {
         case '('  => depth += 1
         case ')'  => depth -= 1
         case _ =>
@@ -532,19 +600,15 @@ object StatementRouter {
     * appear nowhere else in either dialect's SQL, so a top-level `{` IS a
     * literal; an unparseable one fails loudly rather than guessing.
     */
-  private[lake] def rewriteBraces(s: String): String = {
+  private[graft] def rewriteBraces(s: String): String = {
+    val lit = literalMask(s)
     val sb = new StringBuilder
     var i = 0
-    var inS = false
-    var inD = false
     while (i < s.length) {
       val c = s.charAt(i)
-      if (inS) { sb.append(c); if (c == '\'') inS = false; i += 1 }
-      else if (inD) { sb.append(c); if (c == '"') inD = false; i += 1 }
-      else if (c == '\'') { sb.append(c); inS = true; i += 1 }
-      else if (c == '"') { sb.append(c); inD = true; i += 1 }
-      else if (c == '{') {
-        val close = matchingBrace(s, i)
+      if (c == '{' && !lit(i)) {
+        val close = matchingClose(s, i, '{', '}', lit)
+        require(close >= 0, s"unbalanced braces in: $s")
         val inner = rewriteBraces(s.substring(i + 1, close))
         val kvs = splitTopCommas(inner).map(_.trim).filter(_.nonEmpty).map { e =>
           val at = topLevelColon(e)
@@ -554,7 +618,6 @@ object StatementRouter {
         // `MAP {…}` (keyword immediately before) selects the map literal
         var end = sb.length
         while (end > 0 && sb.charAt(end - 1).isWhitespace) end -= 1
-        def isWordChar(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
         val isMap = end >= 3 &&
           sb.substring(end - 3, end).equalsIgnoreCase("MAP") &&
           (end == 3 || !isWordChar(sb.charAt(end - 4)))
@@ -573,35 +636,13 @@ object StatementRouter {
     sb.toString
   }
 
-  /** index of the '}' matching the '{' at `open`, honoring string literals */
-  private def matchingBrace(s: String, open: Int): Int = {
-    var i = open
-    var depth = 0
-    var inS = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inS) { if (c == '\'') inS = false }
-      else c match {
-        case '\'' => inS = true
-        case '{'  => depth += 1
-        case '}'  => depth -= 1; if (depth == 0) return i
-        case _    =>
-      }
-      i += 1
-    }
-    throw new IllegalArgumentException(s"unbalanced braces in: $s")
-  }
-
   /** first single `:` at depth 0 outside quotes (skipping `::` casts) */
-  private def topLevelColon(s: String): Int = {
+  private[graft] def topLevelColon(s: String): Int = {
+    val lit = literalMask(s)
     var i = 0
     var depth = 0
-    var inS = false
     while (i < s.length) {
-      val c = s.charAt(i)
-      if (inS) { if (c == '\'') inS = false }
-      else c match {
-        case '\'' => inS = true
+      if (!lit(i)) s.charAt(i) match {
         case '(' | '[' | '{' => depth += 1
         case ')' | ']' | '}' => depth -= 1
         case ':' if depth == 0 =>
@@ -614,23 +655,15 @@ object StatementRouter {
     -1
   }
 
-  /** index of the ')' matching the '(' at `open`, honoring string literals */
-  private[graft] def matchingParen(s: String, open: Int): Int = {
-    var i = open
-    var depth = 0
-    var inS = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inS) { if (c == '\'') inS = false }
-      else c match {
-        case '\'' => inS = true
-        case '('  => depth += 1
-        case ')'  => depth -= 1; if (depth == 0) return i
-        case _    =>
-      }
-      i += 1
-    }
-    throw new IllegalArgumentException(s"unbalanced parens in: $s")
+  /** index of the ')' matching the '(' at `open`, outside quotes */
+  private[graft] def matchingParen(s: String, open: Int): Int =
+    matchingParen(s, open, literalMask(s))
+
+  /** [[matchingParen]] with the caller's mask of `s` */
+  private def matchingParen(s: String, open: Int, lit: Array[Boolean]): Int = {
+    val close = matchingClose(s, open, '(', ')', lit)
+    if (close < 0) throw new IllegalArgumentException(s"unbalanced parens in: $s")
+    close
   }
 
   /** split "id INTEGER, val VARCHAR, d DECIMAL(10,2)" at top-level commas */
@@ -835,24 +868,27 @@ object StatementRouter {
     }
   }
 
-  /** split an expression list at top-level commas (quotes/parens honored) */
+  /** split an expression list at top-level commas (quotes/parens
+    * honored); the parts come back trimmed, empty ones dropped
+    */
   private[graft] def splitTopCommas(s: String): Seq[String] = {
+    val lit = literalMask(s)
     val parts = mutable.ArrayBuffer[String]()
     var depth = 0
-    var inStr = false
-    val cur = new StringBuilder
-    s.foreach {
-      case '\'' => inStr = !inStr; cur.append('\'')
-      case '(' if !inStr => depth += 1; cur.append('(')
-      case ')' if !inStr => depth -= 1; cur.append(')')
-      // DuckDB list literals/subscripts: a comma inside [1, 2] is not an
-      // argument separator (r11 — map(['k1','k2'], [1,2]) split 4-ways)
-      case '[' if !inStr => depth += 1; cur.append('[')
-      case ']' if !inStr => depth -= 1; cur.append(']')
-      case ',' if depth == 0 && !inStr => parts += cur.toString; cur.clear()
-      case c => cur.append(c)
+    var from = 0
+    var i = 0
+    while (i < s.length) {
+      if (!lit(i)) s.charAt(i) match {
+        // DuckDB list literals/subscripts: a comma inside [1, 2] is not an
+        // argument separator (r11 — map(['k1','k2'], [1,2]) split 4-ways)
+        case '(' | '[' => depth += 1
+        case ')' | ']' => depth -= 1
+        case ',' if depth == 0 => parts += s.substring(from, i); from = i + 1
+        case _ =>
+      }
+      i += 1
     }
-    if (cur.nonEmpty) parts += cur.toString
+    parts += s.substring(from)
     parts.toSeq.map(_.trim).filter(_.nonEmpty)
   }
 
@@ -973,18 +1009,9 @@ object StatementRouter {
   private[graft] def parseCopyOptions(blob: String)
       : (Option[String], Seq[String], Map[String, String], Boolean) = {
     if (blob.trim.isEmpty) return (None, Nil, Map.empty, false)
-    // split on commas outside single quotes, parens, AND brackets
-    // (NULLSTR ['NA','none'] carries top-level-looking commas — r17)
-    val parts = scala.collection.mutable.Buffer[String]()
-    val sb = new StringBuilder; var depth = 0; var inQ = false
-    for (c <- blob) c match {
-      case '\'' => inQ = !inQ; sb += c
-      case '(' | '[' if !inQ => depth += 1; sb += c
-      case ')' | ']' if !inQ => depth -= 1; sb += c
-      case ',' if !inQ && depth == 0 => parts += sb.toString; sb.clear()
-      case ch => sb += ch
-    }
-    if (sb.nonEmpty) parts += sb.toString
+    // split on commas outside quotes, parens, AND brackets (NULLSTR
+    // ['NA','none'] carries top-level-looking commas — r17)
+    val parts = splitTopCommas(blob)
     val OptRe = """(?s)^\s*(\w+)\s*(.*?)\s*$""".r
     def unq(v: String): String = {
       val t = v.trim
@@ -1000,7 +1027,7 @@ object StatementRouter {
     var pby: Seq[String] = Nil
     var ow = false
     val wopts = scala.collection.mutable.Map[String, String]()
-    parts.filter(_.trim.nonEmpty).foreach { part =>
+    parts.foreach { part =>
       val OptRe(key0, value) = part
       key0.toUpperCase match {
         case "FORMAT" => fmt = Some(unq(value).toLowerCase)
@@ -1458,18 +1485,11 @@ object StatementRouter {
   }
 
   /** first index of `name(` outside string literals, word-bounded; -1 if none */
-  private def findMacroCall(s: String, name: String): Int = {
+  private[graft] def findMacroCall(s: String, name: String): Int = {
+    val lit = literalMask(s)
     var i = 0
-    var inS = false
-    var inD = false
-    def isWordChar(c: Char) = Character.isLetterOrDigit(c) || c == '_'
     while (i < s.length) {
-      val c = s.charAt(i)
-      if (inS) { if (c == '\'') inS = false }
-      else if (inD) { if (c == '"') inD = false }
-      else if (c == '\'') inS = true
-      else if (c == '"') inD = true
-      else if (s.regionMatches(true, i, name, 0, name.length) &&
+      if (!lit(i) && s.regionMatches(true, i, name, 0, name.length) &&
           (i == 0 || !isWordChar(s.charAt(i - 1)))) {
         var j = i + name.length
         while (j < s.length && s.charAt(j).isWhitespace) j += 1
@@ -1499,26 +1519,6 @@ object StatementRouter {
   //     LIMIT 1) — Spark decorrelates the LIMIT 1 subquery into a
   //     windowed join, the same plan the native as-of rewrite builds
   //   list_transform/list_filter/list_value/… -> Spark array functions
-
-  /** apply `f` to the segments of `s` outside single/double-quoted
-    * literals (the rename regexes must never touch string contents)
-    */
-  private def mapOutsideLiterals(s: String)(f: String => String): String = {
-    val out = new StringBuilder
-    val cur = new StringBuilder
-    var inS = false
-    var inD = false
-    s.foreach { c =>
-      if (inS) { out.append(c); if (c == '\'') inS = false }
-      else if (inD) { out.append(c); if (c == '"') inD = false }
-      else if (c == '\'' || c == '"') {
-        out.append(f(cur.toString)); cur.clear()
-        out.append(c); if (c == '\'') inS = true else inD = true
-      } else cur.append(c)
-    }
-    out.append(f(cur.toString))
-    out.toString
-  }
 
   /** DuckDB list functions with drop-in Spark twins (same args, same
     * semantics); list_sum/list_unique/len have no 1:1 twin and stay out
@@ -1859,7 +1859,7 @@ object StatementRouter {
           if (!tvfTablePos(q, lit, m.start)) from = m.end
           else {
             val open = q.indexOf('(', m.end - 1)
-            val close = matchingParen(q, open)
+            val close = matchingParen(q, open, lit)
             val arg = q.substring(open + 1, close)
             // trailing alias: [AS] ident [(col)]
             var p = close + 1
@@ -2398,7 +2398,7 @@ object StatementRouter {
           if (!tvfTablePos(q, lit, m.start)) from = m.end
           else {
             val open = q.indexOf('(', m.end - 1)
-            val close = matchingParen(q, open)
+            val close = matchingParen(q, open, lit)
             val args = splitTopCommas(q.substring(open + 1, close))
             require(args.length <= 3,
               "range() takes at most 3 arguments (start, stop, step)")
@@ -2452,7 +2452,7 @@ object StatementRouter {
           if (prevWord == "from") from = m.end
           else {
             val open = q.indexOf('(', m.end - 1)
-            val close = matchingParen(q, open)
+            val close = matchingParen(q, open, lit)
             val args = splitTopCommas(q.substring(open + 1, close))
             if (args.isEmpty || args.length > 3) from = m.end
             else {
@@ -2487,7 +2487,7 @@ object StatementRouter {
           if (!tvfTablePos(q, lit, m.start)) from = m.end
           else {
             val open = q.indexOf('(', m.end - 1)
-            val close = matchingParen(q, open)
+            val close = matchingParen(q, open, lit)
             val args = splitTopCommas(q.substring(open + 1, close))
             // r18: an INTERVAL step walks the calendar CUMULATIVELY in
             // DuckDB (03-31 → 04-30 → 05-30), where Spark's sequence
@@ -2514,13 +2514,14 @@ object StatementRouter {
   private val StarExcludeBareRe = """(?i)(\*\s+)EXCLUDE\s+("?\w+"?)""".r
   private val StarReplaceRe = """(?i)\*\s+REPLACE\s*\(""".r
 
-  private def rewriteStarReplace(s: String): String =
+  private def rewriteStarReplace(s: String): String = {
     // literal-masked: `'* REPLACE (…)'` inside a string must survive
-    StarReplaceRe.findAllMatchIn(s).find(m => !literalMask(s)(m.start)) match {
+    val lit = literalMask(s)
+    StarReplaceRe.findAllMatchIn(s).find(m => !lit(m.start)) match {
       case None => s
       case Some(m) =>
         val open = s.indexOf('(', m.start)
-        val close = matchingParen(s, open)
+        val close = matchingParen(s, open, lit)
         val entries = splitTopCommas(s.substring(open + 1, close)).map { e =>
           // `expr AS name`: a CAST(x AS T) inside expr sits at paren
           // depth > 0, so the top-level AS split is unambiguous
@@ -2533,6 +2534,7 @@ object StatementRouter {
         rewriteStarReplace(
           s.substring(0, m.start) + s"* EXCEPT ($names), $adds" + s.substring(close + 1))
     }
+  }
 
   private val StarRenameRe = """(?i)\*\s+RENAME\s*\(""".r
 
@@ -2544,12 +2546,13 @@ object StatementRouter {
     * the star's expansion order. Names and values are exact; positional
     * consumers (INSERT without a column list, UNION by position) of a
     * *RENAME select see the moved order. */
-  private def rewriteStarRename(s: String): String =
-    StarRenameRe.findAllMatchIn(s).find(m => !literalMask(s)(m.start)) match {
+  private def rewriteStarRename(s: String): String = {
+    val lit = literalMask(s)
+    StarRenameRe.findAllMatchIn(s).find(m => !lit(m.start)) match {
       case None => s
       case Some(m) =>
         val open = s.indexOf('(', m.start)
-        val close = matchingParen(s, open)
+        val close = matchingParen(s, open, lit)
         val entries = splitTopCommas(s.substring(open + 1, close)).map { e =>
           val (ex, alias) = splitTopLevelKeyword(e, "AS")
           require(alias.isDefined, s"cannot parse RENAME entry: '$e'")
@@ -2560,6 +2563,7 @@ object StatementRouter {
         rewriteStarRename(
           s.substring(0, m.start) + s"* EXCEPT ($names), $adds" + s.substring(close + 1))
     }
+  }
 
   private val DistinctOnRe = """(?is)\bSELECT\s+DISTINCT\s+ON\s*\(""".r
 
@@ -2623,16 +2627,12 @@ object StatementRouter {
     "RIGHT", "FULL", "CROSS", "ASOF", "SEMI", "ANTI", "WINDOW", "QUALIFY")
 
   /** end index (exclusive) of an ON condition starting at `from` */
-  private def onConditionEnd(s: String, from: Int): Int = {
+  private[graft] def onConditionEnd(s: String, from: Int): Int = {
+    val lit = literalMask(s)
     var i = from
     var depth = 0
-    var inS = false
-    def isWordChar(c: Char) = Character.isLetterOrDigit(c) || c == '_'
     while (i < s.length) {
-      val c = s.charAt(i)
-      if (inS) { if (c == '\'') inS = false }
-      else c match {
-        case '\'' => inS = true
+      if (!lit(i)) s.charAt(i) match {
         case '(' => depth += 1
         case ')' => if (depth == 0) return i else depth -= 1
         case ',' if depth == 0 => return i
@@ -2656,9 +2656,10 @@ object StatementRouter {
     }
   }
 
-  private def rewriteAsof(s: String): String =
+  private def rewriteAsof(s: String): String = {
     // literal-masked: the phrase inside a string literal must survive
-    AsofRe.findAllMatchIn(s).find(m => !literalMask(s)(m.start)) match {
+    val lit = literalMask(s)
+    AsofRe.findAllMatchIn(s).find(m => !lit(m.start)) match {
       case None => s
       case Some(m) =>
         val isLeft = m.group(1) != null
@@ -2667,7 +2668,7 @@ object StatementRouter {
         // right side: `(subquery)` or a (possibly qualified) name
         val (rtable, afterTable) =
           if (i < s.length && s.charAt(i) == '(') {
-            val close = matchingParen(s, i)
+            val close = matchingParen(s, i, lit)
             (s.substring(i, close + 1), close + 1)
           } else {
             var j = i
@@ -2714,6 +2715,7 @@ object StatementRouter {
         val sep = if (tail.nonEmpty && !tail.head.isWhitespace && tail.head != ')' && tail.head != ',') " " else ""
         rewriteAsof(s.substring(0, m.start) + lat + sep + tail)
     }
+  }
 
   private val SelectHeadRe = """(?is)^\s*SELECT\s+""".r
 
@@ -3103,7 +3105,7 @@ object StatementRouter {
           if (lit(overStart)) { from = overStart + 1 }
           else {
             val open = from + m.end - 1
-            val close = matchingParen(q, open)
+            val close = matchingParen(q, open, lit)
             val body = q.substring(open + 1, close)
             val exRe = """(?is)^(.*?)\s*\bEXCLUDE\s+(CURRENT\s+ROW|NO\s+OTHERS|GROUP|TIES)\s*$""".r
             body match {
@@ -3301,23 +3303,6 @@ object StatementRouter {
   // matching DuckDB; works for maps too), literals -> array(...). Slices
   // (`x[1:3]`) are left for Spark to reject loudly rather than guessed.
 
-  /** mask of positions inside '…'/"…" literals (quote-aware scanners) */
-  private def literalMask(s: String): Array[Boolean] = {
-    val m = new Array[Boolean](s.length)
-    var i = 0
-    var inS = false
-    var inD = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inS) { m(i) = true; if (c == '\'') { if (i + 1 < s.length && s.charAt(i + 1) == '\'') { m(i + 1) = true; i += 1 } else inS = false } }
-      else if (inD) { m(i) = true; if (c == '"') inD = false }
-      else if (c == '\'') { m(i) = true; inS = true }
-      else if (c == '"') { m(i) = true; inD = true }
-      i += 1
-    }
-    m
-  }
-
   private def identChar(c: Char) = Character.isLetterOrDigit(c) || c == '_' || c == '$'
 
   /** keywords that prefix a quoted TYPED literal — part of the primary
@@ -3416,19 +3401,8 @@ object StatementRouter {
     start
   }
 
-  private def matchingBracket(s: String, open: Int, lit: Array[Boolean]): Int = {
-    var i = open
-    var depth = 0
-    while (i < s.length) {
-      if (!lit(i)) s.charAt(i) match {
-        case '[' => depth += 1
-        case ']' => depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
+  private def matchingBracket(s: String, open: Int, lit: Array[Boolean]): Int =
+    matchingClose(s, open, '[', ']', lit)
 
   private[lake] def rewriteBrackets(s: String): String = {
     val lit = literalMask(s)
@@ -4240,10 +4214,10 @@ object StatementRouter {
   private def rewriteCalls(s0: String, name: String)(f: Seq[String] => Option[String]): String = {
     val re = ("(?i)\\b" + java.util.regex.Pattern.quote(name) + "\\s*\\(").r
     var s = s0
+    var lit = literalMask(s)
     var from = 0
     var go = true
     while (go) {
-      val lit = literalMask(s)
       re.findFirstMatchIn(s.substring(from)) match {
         case None => go = false
         case Some(m) =>
@@ -4251,7 +4225,7 @@ object StatementRouter {
           val open = from + m.end - 1
           if (lit(start)) from = start + 1
           else {
-            val close = matchingParen(s, open)
+            val close = matchingParen(s, open, lit)
             // a top-level trailing comma in call args is a DuckDB parser
             // error (r15 — `greatest(1,2,)`): leave the call un-rewritten
             // so Spark's parser refuses it just as loudly, instead of
@@ -4260,6 +4234,7 @@ object StatementRouter {
             else f(splitTopCommas(s.substring(open + 1, close))) match {
               case Some(rep) =>
                 s = s.substring(0, start) + rep + s.substring(close + 1)
+                lit = literalMask(s)
                 // re-scan FROM the replacement so calls nested inside the
                 // rewritten arguments are still visited (r8 advice:
                 // date_diff('day', a, date_diff('day', b, c)) must rewrite
@@ -4314,15 +4289,14 @@ object StatementRouter {
     * positional `?` placeholders substitute the raw argument texts,
     * outside string literals only */
   def bindPrepared(sql: String, args: Seq[String]): String = {
+    val lit = literalMask(sql)
     val out = new StringBuilder(sql.length + 16)
     var i = 0
-    var inS = false
     var next = 0
     while (i < sql.length) {
       val c = sql.charAt(i)
-      if (inS) { out.append(c); if (c == '\'') inS = false; i += 1 }
+      if (lit(i)) { out.append(c); i += 1 }
       else c match {
-        case '\'' => inS = true; out.append(c); i += 1
         case '$' if i + 1 < sql.length && sql.charAt(i + 1).isDigit =>
           var j = i + 1
           while (j < sql.length && sql.charAt(j).isDigit) j += 1
@@ -4698,7 +4672,7 @@ object StatementRouter {
         case None => go = false
         case Some(m) =>
           val open = m.end - 1
-          val close = matchingParen(q, open)
+          val close = matchingParen(q, open, lit)
           val body = q.substring(open + 1, close).trim
           val op = m.group(1)
           val kind = m.group(2).toUpperCase(java.util.Locale.ROOT)
@@ -5487,21 +5461,12 @@ object StatementRouter {
 
   def sparkifyLiterals(s00: String): String = {
     val s = normalizeLiteralForms(s00)
+    val kinds = quoteKinds(s)
     val out = new StringBuilder(s.length + 8)
-    var inS = false
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i)
-      if (!inS) {
-        if (c == '\'') inS = true
-        out.append(c)
-      } else c match {
-        case '\'' =>
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') { out.append("''"); i += 1 }
-          else { inS = false; out.append(c) }
-        case '\\' => out.append("\\\\")
-        case ch => out.append(ch)
-      }
+      if (c == '\\' && kinds(i) == InString) out.append("\\\\") else out.append(c)
       i += 1
     }
     out.toString
@@ -5788,7 +5753,7 @@ object StatementRouter {
             if (lit(start)) from = start + 1
             else {
               val open = from + m.end - 1
-              val close = matchingParen(q, open)
+              val close = matchingParen(q, open, lit)
               val inner = q.substring(open + 1, close).trim
               val body =
                 if (inner.toUpperCase(java.util.Locale.ROOT).startsWith("VALUES"))
@@ -5831,14 +5796,14 @@ object StatementRouter {
         case Some(m) =>
           val fn = m.group(1).toLowerCase(java.util.Locale.ROOT)
           val argOpen = m.end - 1
-          val argClose = matchingParen(q, argOpen)
+          val argClose = matchingParen(q, argOpen, lm)
           val inner = q.substring(argOpen + 1, argClose).trim
           val tail = q.substring(argClose + 1)
           """(?is)^\s*WITHIN\s+GROUP\s*\(""".r.findFirstMatchIn(tail) match {
             case None => from = argClose + 1
             case Some(w) =>
               val wgOpen = argClose + 1 + w.end - 1
-              val wgClose = matchingParen(q, wgOpen)
+              val wgClose = matchingParen(q, wgOpen, lm)
               val ob = q.substring(wgOpen + 1, wgClose).trim
               val obm = """(?is)^ORDER\s+BY\s+(.*)$""".r.findFirstMatchIn(ob)
               require(obm.isDefined, s"WITHIN GROUP requires ORDER BY: $ob")
@@ -6823,21 +6788,14 @@ object StatementRouter {
   /** index of the first top-level (outside parens/literals) occurrence
     * of any keyword in `kws`, or -1
     */
-  private def firstTopLevelKeyword(s: String, kws: Set[String]): Int = {
+  private[graft] def firstTopLevelKeyword(s: String, kws: Set[String]): Int = {
+    val lit = literalMask(s)
     var i = 0
     var depth = 0
-    var inS = false
-    var inD = false
     val n = s.length
-    def isWordChar(c: Char) = Character.isLetterOrDigit(c) || c == '_'
     while (i < n) {
       val c = s.charAt(i)
-      if (inS) {
-        if (c == '\'') { if (i + 1 < n && s.charAt(i + 1) == '\'') i += 1 else inS = false }
-      } else if (inD) { if (c == '"') inD = false }
-      else c match {
-        case '\'' => inS = true
-        case '"'  => inD = true
+      if (!lit(i)) c match {
         case '(' | '[' => depth += 1
         case ')' | ']' => depth -= 1
         case _ if depth == 0 && isWordChar(c) &&

@@ -78,6 +78,12 @@ class CatalogSpec extends AnyFunSuite {
     assert(CatalogState.fromSheets(populated.toSheets) == populated)
   }
 
+  test("toSheets writes each known sheet's CatalogSchema.tables header") {
+    val headers = CatalogSchema.tables.map { case (t, h) => CatalogSchema.sheetName(t) -> h }
+    val known = populated.toSheets.filter(s => CatalogSchema.knownSheetNames(s.name))
+    assert(known.map(s => s.name -> s.rows.head) == headers)
+  }
+
   test("fromSheets finds columns by header, in any order") {
     val reversed = populated.toSheets.map { s =>
       val w = s.rows.map(_.length).max

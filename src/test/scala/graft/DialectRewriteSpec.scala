@@ -724,6 +724,45 @@ class DialectRewriteSpec extends AnyFunSuite {
     // double-doubled — pinned by q_lake_dialect3 staying green
   }
 
+  test("every rewrite scanner reads one quote rule: '…' literals and \"…\" identifiers") {
+    import StatementRouter._
+    val onCond = "a.\"it's\" = b.k AND b.v = 'x, WHERE' WHERE z"
+    val mergeOn = "a.id = b.id AND b.\"WHEN MATCHED\" = 'WHEN MATCHED' WHEN MATCHED THEN DELETE"
+    val cases: Seq[(String, () => Any, Any)] = Seq(
+      ("quoteKinds", () => quoteKinds("a'b''c'\"d\"e").toSeq,
+        Seq[Byte](0, 1, 1, 1, 1, 1, 1, 2, 2, 2, 0)),
+      ("literalMask", () => literalMask("x \"(\" ')'").toSeq,
+        Seq(false, false, true, true, true, false, true, true, true)),
+      ("splitTopLevelKeyword", () => splitTopLevelKeyword(
+          "SELECT \"WHERE\", 'a WHERE' FROM t WHERE a = 1", "WHERE"),
+        ("SELECT \"WHERE\", 'a WHERE' FROM t", Some("a = 1"))),
+      ("splitMergeWhen", () => splitMergeWhen(mergeOn),
+        ("a.id = b.id AND b.\"WHEN MATCHED\" = 'WHEN MATCHED'", Some("MATCHED THEN DELETE"))),
+      ("firstTopLevelKeyword", () => firstTopLevelKeyword(
+          "SELECT \"ORDER\", 'LIMIT' FROM t ORDER BY 1", Set("ORDER", "LIMIT")), 31),
+      ("mapOutsideLiterals", () => mapOutsideLiterals(
+          "a \"a\" 'it''s a' a")(_.replace("a", "b")), "b \"a\" 'it''s a' b"),
+      ("rewriteBraces", () => rewriteBraces("{\"a:b}\": 1, 'c': '}'}"),
+        "named_struct('a:b}', 1, 'c', '}')"),
+      ("findMacroCall", () => findMacroCall("SELECT \"f(\", 'f(1)', f(2)", "f"), 21),
+      ("topLevelColon", () => topLevelColon("\"a:b\": ':'"), 5),
+      ("matchingParen", () => matchingParen("f(\"a)b\", c)", 1), 10),
+      ("splitTopCommas", () => splitTopCommas("\"a,b\", 'it''s, ok', f(\")\", 1)"),
+        Seq("\"a,b\"", "'it''s, ok'", "f(\")\", 1)")),
+      ("parseCopyOptions", () => parseCopyOptions("FORCE_NOT_NULL \"it's\", HEADER true")._3,
+        Map("__graft_force_not_null" -> "\"it's\"", "header" -> "true")),
+      ("onConditionEnd", () => onConditionEnd(onCond, 0), onCond.lastIndexOf("WHERE")),
+      ("bindPrepared", () => bindPrepared("SELECT \"a?b$1\", ?, '$1 ?', $1", Seq("7")),
+        "SELECT \"a?b$1\", 7, '$1 ?', 7"),
+      ("sparkifyLiterals", () => sparkifyLiterals("SELECT 1 AS \"it's\", 'a\\b' AS v"),
+        "SELECT 1 AS \"it's\", 'a\\\\b' AS v"))
+    val wrong = cases.flatMap { case (name, run, want) =>
+      val got = scala.util.Try(run()).fold(e => s"threw $e", identity)
+      if (got == want) None else Some(s"$name: got $got, want $want")
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+  }
+
   test("r10/r13: json_extract family and -> / ->> arrows map to the native") {
     // r13: all spellings land on DuckJsonExtract — paths pass VERBATIM
     // (the native owns the $/pointer/single-key grammar; the old

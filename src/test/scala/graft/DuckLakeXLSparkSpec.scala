@@ -638,4 +638,42 @@ class DuckLakeXLSparkSpec extends AnyFunSuite {
       assert(!spark.catalog.tableExists("ducklake_snapshot"))
     }
   }
+
+  test("a statement's temp views end with its sql() call; its DataFrame keeps them") {
+    val (lake, _, _) = freshLake()
+    lake.sql("CREATE TABLE tv(id INTEGER); INSERT INTO tv VALUES (1)")
+    val v = lake.currentState.currentSnapshot
+    lake.sql("INSERT INTO tv VALUES (2)")
+    val travel = lake.sql(s"SELECT count(*) AS c FROM tv AT (VERSION => $v)")
+    val snaps = lake.sql("SELECT count(*) AS c FROM snapshots()")
+    val names = spark.catalog.listTables().collect().map(_.name).toSet
+    assert(!names.contains(s"tv__v$v") && !names.contains("__snapshots"), names)
+    assert(travel.collect().map(_.getLong(0)).toSeq == Seq(1L))
+    assert(snaps.collect().head.getLong(0) == lake.currentState.snapshots.size.toLong)
+  }
+
+  test("inlining keeps only rows whose cells read back as themselves") {
+    val dir = Files.createTempDirectory("lake").toString
+    val lake = new DuckLakeXLSpark(spark, s"$dir/lake.xlsx", s"$dir/data", inlineRowLimit = 10)
+    lake.sql("CREATE TABLE nv(id INTEGER, v VARCHAR)")
+    def tableId(name: String) = lake.currentState.tableByName(name).get.tableId
+    lake.sql("INSERT INTO nv VALUES (1, ''), (2, 'None'), (3, ' '), (4, 'x')")
+    assert(lake.sql("SELECT id, v IS NULL FROM nv ORDER BY id").collect()
+      .map(r => (r.getInt(0), r.getBoolean(1))).toSeq ==
+      Seq(1 -> false, 2 -> false, 3 -> false, 4 -> false))
+    assert(lake.currentState.inlinedOf(tableId("nv")).isEmpty)
+    // a clean VALUES insert still inlines: catalog rows, no data file
+    lake.sql("CREATE TABLE cv(id INTEGER, v VARCHAR)")
+    lake.sql("INSERT INTO cv VALUES (1, 'a'), (2, NULL)")
+    assert(lake.currentState.inlinedOf(tableId("cv")).size == 2)
+    assert(lake.currentState.filesOf(tableId("cv")).isEmpty)
+    assert(lake.sql("SELECT id, v FROM cv ORDER BY id").collect()
+      .map(r => (r.getInt(0), Option(r.getString(1)))).toSeq == Seq(1 -> Some("a"), 2 -> None))
+  }
+
+  test("a quoted identifier's apostrophe does not hide a literal's backslash") {
+    val (lake, _, _) = freshLake()
+    val r = lake.sql("SELECT 1 AS \"it's\", 'a\\b' AS v").head()
+    assert(r.getString(1) == "a\\b")
+  }
 }

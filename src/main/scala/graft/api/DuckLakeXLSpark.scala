@@ -13,6 +13,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.lake._
+import graft.lake.FileStats.normUri
 import graft.xlsx.ExcelRemote
 
 /** The DuckLakeXL artifact, Spark-native (SURVEY.md Face B): an Excel
@@ -3783,8 +3784,8 @@ class DuckLakeXLSpark(
   }
 
   /** add data_file + per-file column stats rows (+ partition-value rows,
-    * when given) for freshly written files (ONE stats job over all of
-    * them), bump table stats, advance snapshot
+    * when given) for freshly written files (stats from their footers, see
+    * [[FileStats]]), bump table stats, advance snapshot
     */
   private def registerWrittenFiles(t: TableRow, written: Seq[Path],
       partVals: Map[String, Seq[Option[String]]] = Map.empty): Unit = {
@@ -3808,7 +3809,8 @@ class DuckLakeXLSpark(
     *           cost footer + skipped row groups);
     *   job 2 — ONE copy-on-write rewrite of the union of partially
     *           matching files (fully-matching files drop with zero IO);
-    *   job 3 — ONE stats pass over the rewritten files.
+    * The rewritten files' stats come from their parquet footers
+    * ([[FileStats]]), so no third job reads them back.
     * A WHERE-less DELETE (incl. TRUNCATE) is metadata-only: zero jobs.
     */
   private def executeDelete(s: StatementRouter.Delete): Unit = {
@@ -3860,8 +3862,9 @@ class DuckLakeXLSpark(
 
   /** Distributed copy-on-write UPDATE — same constant-job shape as DELETE:
     * one hit-count job, ONE rewrite of the union of affected files with
-    * every SET expression evaluated against the pre-update row, one stats
-    * job. Row counts are unchanged, so table stats stay put.
+    * every SET expression evaluated against the pre-update row; stats
+    * from the rewritten files' footers. Row counts are unchanged, so table
+    * stats stay put.
     */
   private def executeUpdate(s: StatementRouter.Update): Unit = {
     val t = requireTable(s.table)
@@ -3926,12 +3929,14 @@ class DuckLakeXLSpark(
     *           `input_file_name`) against the source;
     *   job 2 — ONE rewrite of the affected-file union with the matched
     *           action applied (UPDATE SET sees both aliases; DELETE drops
-    *           matched rows) + its stats pass;
+    *           matched rows);
     *   job 3 — NOT MATCHED source rows anti-joined against the full
-    *           pre-merge target, written as fresh insert files + stats.
+    *           pre-merge target, written as fresh insert files.
+    * Written files take their stats from their footers ([[FileStats]]).
     * Cardinality (standard MERGE semantics): a target row matched by
     * several source rows raises an error — detected for free against the
-    * rewrite's stats pass, which must preserve the affected row count.
+    * rewrite's footer record counts, which must preserve the affected row
+    * count.
     */
   private def executeMerge(s: StatementRouter.Merge): Unit = {
     val t = requireTable(s.table)
@@ -3995,7 +4000,7 @@ class DuckLakeXLSpark(
       // target row is matched by several source rows — the left_outer
       // rewrite would silently duplicate it). The rewrite of an UPDATE
       // preserves row counts, so any excess over the affected files' row
-      // sum proves a multi-match; the stats pass already counted outputs,
+      // sum proves a multi-match; the footers already counted outputs,
       // making this check free.
       if (s.matchedSets.isDefined) {
         val rewCnt = ns2.dataFiles
@@ -4132,11 +4137,7 @@ class DuckLakeXLSpark(
       .toMap
   }
 
-  /** `input_file_name` yields `file:///…` URIs; catalog paths are plain */
-  private def normUri(p: String): String =
-    if (p.startsWith("file:")) new java.net.URI(p).getPath else p
-
-  /** fold freshly written files (+ their one-job stats and, for
+  /** fold freshly written files (+ their [[FileStats]] and, for
     * partitioned writes, their per-file partition values) into `ns` at
     * `snap`
     */
@@ -4145,7 +4146,7 @@ class DuckLakeXLSpark(
       partVals: Map[String, Seq[Option[String]]] = Map.empty): (CatalogState, Long) = {
     if (written.isEmpty) return (ns0, fid0)
     val cols = ns0.columnsOf(t.tableId)
-    val statsByPath = fileStatsAll(written.map(_.toString), schema, cols)
+    val statsByPath = FileStats.collect(spark, written.map(_.toString), schema, cols)
     var ns = ns0
     var fid = fid0
     written.foreach { p =>
@@ -4606,68 +4607,6 @@ class DuckLakeXLSpark(
     }
   }
 
-  /** statistics batch width: files per aggregation job. One groupBy row
-    * per file × (3 stats × column-count + 1) cells collects to the
-    * driver per batch, so the driver-resident footprint is bounded by
-    * the BATCH (≈8k files × 30 cols × 3 strings ≈ tens of MB), never by
-    * the write: a 1000-executor INSERT landing 100k part-files runs ~13
-    * bounded jobs instead of one mega-wide collect (r5 judge #8).
-    */
-  private def fileStatsBatchSize: Int =
-    spark.conf.get("spark.graft.fileStatsBatch", "8192").toInt
-
-  /** per-file stats for MANY files in bounded-size agg jobs (see
-    * [[fileStatsBatchSize]]); each batch is one job grouped by
-    * `input_file_name` — the per-file-job version of this was the r2
-    * verdict's "same pattern in miniature"
-    */
-  private def fileStatsAll(paths: Seq[String], schema: StructType, cols: Vector[ColumnRow])
-      : Map[String, (Long, Map[Long, (Option[String], Option[String], Long)])] =
-    if (paths.isEmpty) Map.empty
-    else paths.grouped(fileStatsBatchSize)
-      .map(batch => fileStatsBatch(batch, schema, cols))
-      .reduce(_ ++ _)
-
-  /** record count + min/max/nullcount per column for one bounded batch of
-    * files in ONE agg job grouped by `input_file_name` (the same stats
-    * DuckLake's writer records per data file)
-    */
-  private def fileStatsBatch(paths: Seq[String], schema: StructType, cols: Vector[ColumnRow])
-      : Map[String, (Long, Map[Long, (Option[String], Option[String], Long)])] = withoutAQE {
-    val fdf = spark.read.schema(schema).parquet(paths: _*)
-    // nested/binary columns carry NO min/max (maps are not even orderable
-    // in Spark; an array/struct/binary min cast to string is not a usable
-    // pruning bound) — null count still applies to every type
-    def statable(name: String): Boolean =
-      schema.fields.find(_.name.equalsIgnoreCase(name)).forall(_.dataType match {
-        case _: ArrayType | _: StructType | _: MapType | BinaryType => false
-        case _ => true
-      })
-    val statAggs = cols.flatMap(c => Seq(
-      (if (statable(c.columnName)) min(colq(fdf, c.columnName)).cast(StringType)
-       else lit(null).cast(StringType)).as(s"mn_${c.columnOrder}"),
-      (if (statable(c.columnName)) max(colq(fdf, c.columnName)).cast(StringType)
-       else lit(null).cast(StringType)).as(s"mx_${c.columnOrder}"),
-      sum(when(colq(fdf, c.columnName).isNull, 1L).otherwise(0L)).as(s"nl_${c.columnOrder}"))) :+
-      count(lit(1)).as("cnt")
-    val rows = fdf.groupBy(input_file_name().as("_file"))
-      .agg(statAggs.head, statAggs.tail: _*).collect()
-    val byNorm = rows.map(r => normUri(r.getAs[String]("_file")) -> r).toMap
-    val emptyStats = cols.map(c =>
-      c.columnId -> ((None: Option[String], None: Option[String], 0L))).toMap
-    paths.map { p =>
-      byNorm.get(normUri(p)) match {
-        // a bound the workbook reads back as NULL ('', 'None', 'nan', …)
-        // is no bound here either: the writer's catalog equals a pull's
-        case Some(r) => p -> ((r.getAs[Long]("cnt"), cols.map(c => c.columnId -> ((
-          Option(r.getAs[String](s"mn_${c.columnOrder}")).flatMap(CatalogState.optValue),
-          Option(r.getAs[String](s"mx_${c.columnOrder}")).flatMap(CatalogState.optValue),
-          r.getAs[Long](s"nl_${c.columnOrder}")))).toMap))
-        case None => p -> ((0L, emptyStats)) // zero-row part file
-      }
-    }.toMap
-  }
-
   /** Maintenance: merge the small-file tail of `table` into ~targetBytes
     * files under a new snapshot. Rows are bit-identical; old files are
     * end-snapshotted so time travel still resolves them. Cost is
@@ -4800,12 +4739,12 @@ class DuckLakeXLSpark(
     Files.walk(tmp).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
     val ended = state.copy(dataFiles = state.dataFiles.map(d =>
       if (mergeIds.contains(d.dataFileId) && d.endSnapshot.isEmpty) d.copy(endSnapshot = Some(snap)) else d))
-    // plus one stats job over every merged output
+    // stats of every merged output, from its footer
     val (ns2a, fid2) = appendWrittenFiles(ended, t, snap, fid, written, schema)
     val ns2 = ns2a.copy(snapshotChanges = ns2a.snapshotChanges :+
       SnapshotChangeRow(snap, s"compacted_table:${t.tableName}"))
     // before committing the snapshot: every input row must have survived
-    // the rewrite (the stats pass already counted the outputs, so this
+    // the rewrite (the footers already counted the outputs, so this
     // check is free) — a silent drop here would be silent data loss
     val writtenCnt = ns2.dataFiles
       .filter(d => d.tableId == t.tableId && d.beginSnapshot == snap)
@@ -4828,11 +4767,12 @@ class DuckLakeXLSpark(
     * becomes a hive_partition mapping entry (its value materializes from
     * the path at scan time); any other catalog column reads NULL. Files
     * sharing one resolution shape share one mapping id. Per-file stats
-    * run in the same batch-bounded one-job-per-shape pass the INSERT
-    * path uses, so stats pruning works on registered files too. Cost is
-    * O(files) driver-side footer reads + one Spark stats job per shape —
-    * no data is copied, which is the point at 100 TB: registering an
-    * existing lake is a metadata operation.
+    * come from [[FileStats]], as on the INSERT path, so stats pruning works
+    * on registered files too. Cost is one driver-side footer read per file,
+    * which gives both the field names and the stats; only files whose
+    * footers cannot answer exactly go to a batch-bounded stats job per
+    * shape. No data is copied, which is the point at 100 TB: registering
+    * an existing lake is a metadata operation.
     */
   def addDataFiles(table: String, paths: Seq[String]): Unit = withCatalogSync {
     val t = requireTable(table)
@@ -4845,8 +4785,9 @@ class DuckLakeXLSpark(
     // resolve each file's shape: fields from the parquet footer, hive
     // keys from the path; files sharing a shape share one mapping id
     case class Shape(fieldByCol: Map[Long, String], hiveByCol: Map[Long, String])
+    val footers = FileStats.readFooters(paths)
     val shaped: Seq[(String, Shape)] = paths.map { p =>
-      val fLower = spark.read.parquet(p).schema.fieldNames
+      val fLower = FileStats.fieldNames(footers(p))
         .map(f => f.toLowerCase -> f).toMap
       val hiveByLower = hiveRe.findAllMatchIn(p)
         .map(m => m.group(1).toLowerCase -> m.group(1)).toMap
@@ -4883,7 +4824,7 @@ class DuckLakeXLSpark(
         .map(fn => c.copy(columnName = fn)))
       val readSchema = StructType(physCols.map(pc =>
         StructField(pc.columnName, CatalogSchema.parseType(pc.columnType), true)))
-      val statsByPath = fileStatsAll(gpaths, readSchema, physCols)
+      val statsByPath = FileStats.collect(spark, gpaths, readSchema, physCols, footers)
       gpaths.foreach { p =>
         val (cnt, st) = statsByPath(p)
         ns = ns.copy(

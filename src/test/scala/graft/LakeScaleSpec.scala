@@ -102,6 +102,55 @@ class LakeScaleSpec extends AnyFunSuite {
       (1 to 20).map(_ * 10 + 1).sum.toLong)
   }
 
+  test("a 1-row INSERT VALUES runs one Spark job: the write; stats come from the footer") {
+    val (lake, _, _) = freshLake()
+    lake.sql("CREATE TABLE one(id INTEGER, v VARCHAR, x DOUBLE)")
+    val jobs = jobsInGroup("ins-one") { lake.sql("INSERT INTO one VALUES (1, 'a', 1.5)") }
+    assert(jobs == 1, s"INSERT ran $jobs Spark jobs; want 1 (the write)")
+    val t = lake.currentState.tableByName("one").get
+    val f = lake.currentState.filesOf(t.tableId).head
+    assert(f.recordCount == 1L)
+    assert(lake.currentState.fileColumnStats.filter(_.dataFileId == f.dataFileId)
+      .map(s => (s.minValue, s.maxValue, s.nullCount)).toSet ==
+      Set((Some("1"), Some("1"), 0L), (Some("a"), Some("a"), 0L), (Some("1.5"), Some("1.5"), 0L)))
+  }
+
+  test("DELETE and UPDATE over 20 files run at most 2 Spark jobs (hits, rewrite)") {
+    val (lake, _, _) = freshLake()
+    lake.sql("CREATE TABLE du(id INTEGER, qty INTEGER)")
+    for (i <- 1 to 20)
+      lake.sql(s"INSERT INTO du VALUES (${i * 10}, $i), (${i * 10 + 1}, $i)")
+    val upd = jobsInGroup("upd-two") { lake.sql("UPDATE du SET qty = qty + 1 WHERE id % 2 = 0") }
+    assert(upd <= 2, s"UPDATE ran $upd Spark jobs; want <=2")
+    val del = jobsInGroup("del-two") { lake.sql("DELETE FROM du WHERE id % 2 = 1") }
+    assert(del <= 2, s"DELETE ran $del Spark jobs; want <=2")
+    assert(lake.sql("SELECT count(*) AS c, sum(qty) AS s FROM du").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((20L, (1 to 20).map(_ + 1).sum.toLong)))
+  }
+
+  test("addDataFiles of flat parquet files runs no Spark job") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val (lake, _, data) = freshLake()
+    lake.sql("CREATE TABLE reg3(id INTEGER, v VARCHAR)")
+    val paths = (1 to 3).map { i =>
+      val tmp = Files.createTempDirectory("reg3").resolve("out").toString
+      Seq((i, s"v$i"), (i * 10, s"w$i")).toDF("id", "v").coalesce(1).write.parquet(tmp)
+      val part = Files.list(java.nio.file.Paths.get(tmp)).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      val dest = java.nio.file.Paths.get(data, s"reg3_$i.parquet")
+      Files.createDirectories(dest.getParent)
+      Files.move(part, dest)
+      dest.toString
+    }
+    val jobs = jobsInGroup("add-files") { lake.addDataFiles("reg3", paths) }
+    assert(jobs == 0, s"addDataFiles ran $jobs Spark jobs; want 0")
+    assert(lake.sql("SELECT sum(id) AS s FROM reg3").collect()(0).getLong(0) == 66L)
+    val cs = lake.columnStats("reg3").collect()
+      .map(r => r.getString(0) -> ((r.getString(2), r.getString(3)))).toMap
+    assert(cs("id") == (("1", "30")))
+  }
+
   test("WHERE-less DELETE (and TRUNCATE) is metadata-only: zero Spark jobs") {
     val (lake, _, _) = freshLake()
     lake.sql("CREATE TABLE tr(id INTEGER)")
@@ -286,6 +335,18 @@ class LakeScaleSpec extends AnyFunSuite {
     assert(after.size < 24 && after.size >= 5, s"got ${after.size} files")
     assert(lake.sql("SELECT count(*) AS c FROM cp").collect()(0).getLong(0) == 24L)
     assert(lake.sql("SELECT sum(id) AS s FROM cp").collect()(0).getLong(0) == 300L)
+  }
+
+  test("compact runs at most 2 Spark jobs") {
+    val (lake, _, _) = freshLake()
+    lake.sql("CREATE TABLE cp2(id INTEGER, v VARCHAR)")
+    for (i <- 1 to 12) lake.sql(s"INSERT INTO cp2 VALUES ($i, 'r$i')")
+    val t = lake.currentState.tableByName("cp2").get
+    val sz = lake.currentState.filesOf(t.tableId).map(_.fileSizeBytes).max
+    val jobs = jobsInGroup("compact-two") { lake.compact("cp2", sz * 4 + 1) }
+    assert(jobs <= 2, s"compact ran $jobs Spark jobs; want <=2")
+    assert(lake.currentState.filesOf(t.tableId).size < 12)
+    assert(lake.sql("SELECT sum(id) AS s FROM cp2").collect()(0).getLong(0) == 78L)
   }
 
   test("CREATE OR REPLACE TABLE swaps contents; COPY TO exports one file") {
@@ -650,6 +711,48 @@ class LakeScaleSpec extends AnyFunSuite {
         .map(r => r.getString(0) -> ((r.getString(2), r.getString(3)))).toMap
       assert(cs("id") == (("0", "49")))
       assert(lake.sql("SELECT sum(id) AS s FROM big").collect()(0).getLong(0) == 1225L)
+    } finally {
+      prev match {
+        case Some(v) => spark.conf.set("spark.graft.fileStatsBatch", v)
+        case None => spark.conf.unset("spark.graft.fileStatsBatch")
+      }
+    }
+  }
+
+  test("file stats a footer cannot answer collect in bounded batches (TIMESTAMP column)") {
+    import graft.xlsx.XlsxCodec
+    val (lake, xlsx, _) = freshLake()
+    // TIMESTAMPTZ is written as INT96, which carries no usable bounds, so
+    // every file reaches the stats job: 2 files per job
+    val prev = spark.conf.getOption("spark.graft.fileStatsBatch")
+    spark.conf.set("spark.graft.fileStatsBatch", "2")
+    try {
+      lake.sql("CREATE TABLE bigts(id INTEGER, ts TIMESTAMPTZ)")
+      val aqePrev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      val jobs = try jobsInGroup("ts-batches") {
+        lake.sql("INSERT INTO bigts SELECT CAST(range AS INTEGER) AS id, " +
+          "timestamp_seconds(range * 3600) AS ts FROM range(0, 50) DISTRIBUTE BY id")
+      } finally spark.conf.set("spark.sql.adaptive.enabled", aqePrev)
+      val t = lake.currentState.tableByName("bigts").get
+      val files = lake.currentState.filesOf(t.tableId)
+      assert(files.map(_.recordCount).sum == 50L)
+      assert(files.count(_.recordCount > 0) > 2, "need more non-empty files than the batch width")
+      assert(jobs >= 1 + (files.size + 1) / 2,
+        s"INSERT ran $jobs Spark jobs for ${files.size} files")
+      // every non-empty file has bounds for both columns, across ALL batches
+      val fcs = XlsxCodec.read(xlsx).find(_._1 == "file_column_statistics").map(_._2).get
+      val fh = fcs.head
+      val bounded = fcs.tail.filter(_.exists(_.nonEmpty))
+        .filter(r => r(fh.indexOf("min_value")).nonEmpty && r(fh.indexOf("max_value")).nonEmpty)
+        .map(r => r(fh.indexOf("data_file_id")).toDouble.toLong)
+      files.filter(_.recordCount > 0).foreach(f =>
+        assert(bounded.count(_ == f.dataFileId) == 2, s"file ${f.dataFileId} lacks bounds"))
+      val cs = lake.columnStats("bigts").collect()
+        .map(r => r.getString(0) -> ((r.getString(2), r.getString(3)))).toMap
+      assert(cs("id") == (("0", "49")))
+      assert(cs("ts")._1.startsWith("1970-01-01 00:00:00") &&
+        cs("ts")._2.startsWith("1970-01-03 01:00:00"), s"ts bounds ${cs("ts")}")
     } finally {
       prev match {
         case Some(v) => spark.conf.set("spark.graft.fileStatsBatch", v)
